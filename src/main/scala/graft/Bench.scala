@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Per-round benchmark: every query is fully evaluated through a `noop`
   * sink (a bare `.count()` would let Catalyst prune the masking projections
   * away and time a metadata scan). A failing query reports its elapsed time
@@ -8,16 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // the cache sweep below unpersists localCheckpoint'd RDD blocks, and
     // every such unpersist logs a per-RDD "lineage has been truncated"
     // WARN (hundreds per run). The behavior is intended — each sample
@@ -101,16 +91,8 @@ object Bench {
             false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // outside the timed region: drop caches pinned by numbering/LSH
-        // operators so no sample reuses a previous sample's materialisation
-        // (and long runs don't accumulate dead cache entries). clearCache
-        // only covers the SQL cache; localCheckpoint blocks (LSH candidate
-        // frames, the CC loop) register as persistent RDDs, so sweep those
-        // too — every sample rebuilds its frames from scratch, so nothing
-        // live can reference last sample's checkpoint data.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        // outside the timed region, so every sample rebuilds its frames
+        GraftSession.clearCaches(spark)
         name -> (if (ok) sec else -sec)
       }.toMap
     }
@@ -120,16 +102,7 @@ object Bench {
       val median = times.map(math.abs).sorted.apply(times.length / 2)
       name -> (if (times.exists(_ < 0)) -median else median)
     }.toMap
-    // JSON string escaping for interpolated keys and paths: a query
-    // name or sf path containing a quote/backslash/control char would
-    // otherwise emit invalid JSON into the tail the driver parses
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val qs = results.map { case (k, v) => jstr(k) + ":" + v }
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + v }
       .mkString("{", ",", "}")
     // contention self-diagnosis: all N raw samples and the per-query min
     // ride along, so a reader can spot `min << median` (transient stall
@@ -137,13 +110,13 @@ object Bench {
     // (sustained host contention) from the artifact alone, without a
     // manual quiet re-run.
     val mins = names.map { name =>
-      jstr(name) + ":" + samples.map(s => math.abs(s(name))).min
+      Json.str(name) + ":" + samples.map(s => math.abs(s(name))).min
     }.mkString("{", ",", "}")
     val raw = names.map { name =>
-      jstr(name) + ":" + samples.map(_(name)).mkString("[", ",", "]")
+      Json.str(name) + ":" + samples.map(_(name)).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = results.values.map(math.abs).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min":$mins,"samples":$raw,"repeats":$repeats,"wall_sec":$wallSec,"sf":${jstr(sfDir)}}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"min":$mins,"samples":$raw,"repeats":$repeats,"wall_sec":$wallSec,"sf":${Json.str(sfDir)}}"""
     println(line)
     // the driver captures only a truncated stdout tail (BENCH_r11/r12
     // both landed with "parsed": null), so the full line ALSO lands in
@@ -196,12 +169,12 @@ object Bench {
       names.map(n => samples.map(s => math.abs(s(n))).min).sum
     val top = results.toSeq.sortBy { case (_, v) => -math.abs(v) }
       .take(25)
-      .map { case (k, v) => jstr(k) + ":" + r3(math.abs(v)) }
+      .map { case (k, v) => Json.str(k) + ":" + r3(math.abs(v)) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
       s""""repeats":$repeats,"wall_sec":${r3(wallSec)},""" +
       s""""queries_n":${names.size},"min_total":${r3(minTotal)},""" +
-      s""""top_median":$top,"full":${jstr(out)},"sf":${jstr(sfDir)}}""")
+      s""""top_median":$top,"full":${Json.str(out)},"sf":${Json.str(sfDir)}}""")
     spark.stop()
   }
 }

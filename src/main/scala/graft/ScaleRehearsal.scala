@@ -194,16 +194,8 @@ object ScaleRehearsal {
     val badModes = modes.filterNot(KnownModes)
     require(badModes.isEmpty, s"unknown mode(s) " +
       s"${badModes.mkString(", ")} — valid: ${KnownModes.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
 
     val corpusModes = modes.filterNot(_ == "relational")
     // ONE shift across both tables: doc_id and vec_id are the SAME
@@ -222,15 +214,15 @@ object ScaleRehearsal {
       val dst = s"$workDir/$mode"
       new java.io.File(dst).mkdirs()
       inflate(spark, s"$sfDir/documents.parquet",
-        s"$dst/documents.parquet", "doc_id", factor, cpus.toInt,
+        s"$dst/documents.parquet", "doc_id", factor, cpus,
         distinctCopies = mode == "distinct", shiftOverride = shared)
       inflate(spark, s"$sfDir/embeddings.parquet",
-        s"$dst/embeddings.parquet", "vec_id", factor, cpus.toInt,
+        s"$dst/embeddings.parquet", "vec_id", factor, cpus,
         distinctCopies = mode == "distinct", shiftOverride = shared)
     }
     if (modes.contains("relational"))
       inflateRelational(spark, sfDir, s"$workDir/relational", factor,
-        cpus.toInt)
+        cpus)
 
     def timeOne(name: String, dir: String): Double = {
       val t0 = System.nanoTime()
@@ -246,9 +238,7 @@ object ScaleRehearsal {
           false
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.clearCaches(spark)
       if (ok) sec else -sec
     }
 

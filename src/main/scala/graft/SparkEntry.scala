@@ -11,9 +11,10 @@ import graft.pipeline.{Dedup, Linkage, Multimodal, Pq, Privacy, Similarity,
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * Every entry in [[queries]] is an operator from SURVEY.md §2 (or a
-  * north-star extension) exercised end-to-end through the library; entries in
-  * [[oracleSql]] are DuckDB-equivalent ANSI SQL on the same parquet tables.
+  * Each query is declared once, as a [[Q]] in [[declared]]: an operator
+  * from SURVEY.md §2 (or a north-star extension) exercised end-to-end
+  * through the library, next to DuckDB-equivalent ANSI SQL on the same
+  * parquet tables. [[queries]] and [[oracleSql]] are derived from that list.
   * Column names are aliased identically on both sides; both sides ORDER BY a
   * total order so row order matches byte-for-byte.
   *
@@ -868,10 +869,12 @@ object SparkEntry {
     * multi-action query calls `docs()` five to ten times — unmemoized,
     * the guard itself cost more than the exchange it was deciding
     * about (measured: q_dsir_select 1.35 s -> 2.07 s). The split count
-    * of a fixed source directory cannot change within a run.
+    * of a fixed source directory cannot change within a run. Keyed on
+    * the session's UUID, not the session, so the memo never keeps a
+    * stopped session reachable.
     */
   private val fanOutDecisions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
+    new java.util.concurrent.ConcurrentHashMap[(String, String),
       java.lang.Boolean]()
 
   private def fanOutScanKeyed(df: DataFrame, key: String): DataFrame = {
@@ -883,7 +886,8 @@ object SparkEntry {
     // none (VERDICT r21 "What's wrong" §1). getNumPartitions plans the
     // scan RDD (driver-side only, no job) and returns the true split
     // count; at real corpus scale (splits >= cores) this is a no-op.
-    val need = fanOutDecisions.computeIfAbsent((df.sparkSession, key),
+    val need = fanOutDecisions.computeIfAbsent(
+      (org.apache.spark.sql.GraftSessionId(df.sparkSession), key),
       _ => df.rdd.getNumPartitions < p).booleanValue()
     if (need) df.repartition(p) else df
   }
@@ -5122,210 +5126,29 @@ object SparkEntry {
   }
 
   // ---------------------------------------------------------------- registry
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mask_static" -> (maskStatic _),
-    "mask_rownum" -> (maskRownum _),
-    "mask_hash" -> (maskHash _),
-    "mask_where" -> (maskWhere _),
-    "mask_global_where" -> (maskGlobalWhere _),
-    "mask_unique" -> (maskUnique _),
-    "mask_fields" -> (maskFields _),
-    "mask_fields_closure" -> (maskFieldsClosure _),
-    "mask_composite_pk" -> (maskCompositePk _),
-    "mask_blueprint_full" -> (maskBlueprintFull _),
-    "mask_generators" -> (maskGenerators _),
-    "mask_generator_oracle" -> (maskGeneratorOracle _),
-    "mask_format_preserving" -> (maskFormatPreserving _),
-    "mask_fp_sync" -> (maskFpSync _),
-    "mask_date_shift" -> (maskDateShift _),
-    "fk_sync" -> (fkSync _),
-    "q1_agg" -> (q1Agg _),
-    "q_join_broadcast" -> (qJoinBroadcast _),
-    "q_skew_join" -> (qSkewJoin _),
-    "q_skew_agg" -> (qSkewAgg _),
-    "q_hll_distinct" -> (qHllDistinct _),
-    "q_hll_merge" -> (qHllMerge _),
-    "q_bucketed_join" -> (qBucketedJoin _),
-    "q5_multijoin" -> (q5MultiJoin _),
-    "q_window_topk" -> (qWindowTopk _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_window_dist" -> (qWindowDist _),
-    "q_sort_limit" -> (qSortLimit _),
-    "q_setops" -> (qSetOps _),
-    "q_intersect" -> (qIntersect _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_distinct_agg" -> (qDistinctAgg _),
-    "q_percentile" -> (qPercentile _),
-    "q_percentile_gk_parity" -> (qPercentileGkParity _),
-    "q_histogram" -> (qHistogram _),
-    "q_pivot" -> (qPivot _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_having" -> (qHaving _),
-    "q_scalar_subquery" -> (qScalarSubquery _),
-    "q_json" -> (qJson _),
-    "q_time_bucket" -> (qTimeBucket _),
-    "q_sessionize" -> (qSessionize _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_range_count" -> (qRangeCount _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_exact_best" -> (qDedupExactBest _),
-    "q_dedup_near_best" -> (qDedupNearBest _),
-    "q_dedup_near" -> (qDedupNear _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_incr" -> (qDedupIncr _),
-    "q_dedup_append" -> (qDedupAppend _),
-    "q_substring_dedup" -> (qSubstringDedup _),
-    "q_line_dedup" -> (qLineDedup _),
-    "q_text_stats" -> (qTextStats _),
-    "q_subword" -> (qSubword _),
-    "q_lang_id" -> (qLangId _),
-    "q_quality" -> (qQuality _),
-    "q_gopher_rules" -> (qGopherRules _),
-    "q_gopher_full" -> (qGopherFull _),
-    "q_c4_rules" -> (qC4Rules _),
-    "q_html_extract" -> (qHtmlExtract _),
-    "q_c4_ccnet" -> (qC4Ccnet _),
-    "q_repetition" -> (qRepetition _),
-    "q_pii" -> (qPii _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decontaminate_bloom" -> (qDecontaminateBloom _),
-    "q_decontaminate_spans" -> (qDecontaminateSpans _),
-    "q_zorder" -> (qZorder _),
-    "q_vocab" -> (qVocab _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_tfidf" -> (qTfidf _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_winnow" -> (qWinnow _),
-    "q_winnow_overlap" -> (qWinnowOverlap _),
-    "q_heavy" -> (qHeavy _),
-    "q_pack" -> (qPack _),
-    "q_pack_chunks" -> (qPackChunks _),
-    "q_pack_boundaries" -> (qPackBoundaries _),
-    "q_simhash" -> (qSimhash _),
-    "q_simhash_near" -> (qSimhashNear _),
-    "q_winnow64_parity" -> (qWinnow64Parity _),
-    "q_simhash64_parity" -> (qSimhash64Parity _),
-    "q_substring_dedup64_parity" -> (qSubstringDedup64Parity _),
-    "q_sim_topk" -> (qSimTopk _),
-    "q_sim_lsh" -> (qSimLsh _),
-    "q_sim_ivf" -> (qSimIvf _),
-    "q_ivf_recluster" -> (qIvfRecluster _),
-    "q_ivf_recluster_2l" -> (qIvfRecluster2l _),
-    "q_sim_ivf_append" -> (qSimIvfAppend _),
-    "q_sim_ivf_batch" -> (qSimIvfBatch _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_ann_recall_2l" -> (qAnnRecall2l _),
-    "q_pq" -> (qPq _),
-    "q_ivf_pq" -> (qIvfPq _),
-    "q_ivf_pq_append" -> (qIvfPqAppend _),
-    "q_ivf_pq_batch" -> (qIvfPqBatch _),
-    "q_ivf_int8" -> (qIvfInt8 _),
-    "q_ivf_int8_append" -> (qIvfInt8Append _),
-    "q_ivf_int8_batch" -> (qIvfInt8Batch _),
-    "q_embed_dedup" -> (qEmbedDedup _),
-    "q_semdedup_pairs" -> (qSemdedupPairs _),
-    "q_semdedup" -> (qSemdedup _),
-    "q_semdedup_best" -> (qSemdedupBest _),
-    "q_semdedup_auto" -> (qSemdedupAuto _),
-    "q_semdedup_2l" -> (qSemdedup2l _),
-    "q_semdedup_2l_incr" -> (qSemdedup2lIncr _),
-    "q_semdedup_incr" -> (qSemdedupIncr _),
-    "q_curation_sem" -> (qCurationSem _),
-    "q_quantize" -> (qQuantize _),
-    "q_sample" -> (qSample _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q_split" -> (qSplit _),
-    "q_lm_model" -> (qLmModel _),
-    "q_lm_score" -> (qLmScore _),
-    "q_nb_model" -> (qNbModel _),
-    "q_nb_classify" -> (qNbClassify _),
-    "q_nb_eval" -> (qNbEval _),
-    "q_nb_eval_bigram" -> (qNbEvalBigram _),
-    "q_dsir_model" -> (qDsirModel _),
-    "q_dsir_score" -> (qDsirScore _),
-    "q_dsir_select" -> (qDsirSelect _),
-    "q_curation_dsir" -> (qCurationDsir _),
-    "q_cluster_mix" -> (qClusterMix _),
-    "q_bm25_stats" -> (qBm25Stats _),
-    "q_bm25_topk" -> (qBm25Topk _),
-    "q_bm25_batch" -> (qBm25Batch _),
-    "q_bm25_index" -> (qBm25Index _),
-    "q_bm25_append" -> (qBm25Append _),
-    "q_bm25_compact" -> (qBm25Compact _),
-    "q_bm25_index_batch" -> (qBm25IndexBatch _),
-    "q_hybrid_rrf" -> (qHybridRrf _),
-    "q_hybrid_index" -> (qHybridIndex _),
-    "q_mix_plan" -> (qMixPlan _),
-    "q_mix_domains" -> (qMixDomains _),
-    "q_mix_temperature" -> (qMixTemperature _),
-    "q_mix_temp_sample" -> (qMixTempSample _),
-    "q_mix_upsample" -> (qMixUpsample _),
-    "q_curation_temp" -> (qCurationTemp _),
-    "q_curation_drift" -> (qCurationDrift _),
-    "q_data_card" -> (qDataCard _),
-    "q_curation" -> (qCuration _),
-    "q_curation_pack" -> (qCurationPack _),
-    "q_curation_weighted" -> (qCurationWeighted _),
-    "q_bpe" -> (qBpe _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_bpe_train_encode" -> (qBpeTrainEncode _),
-    "q_bpe_train_tokens" -> (qBpeTrainTokens _),
-    "q_wordpiece_train" -> (qWordpieceTrain _),
-    "q_wordpiece_train_encode" -> (qWordpieceTrainEncode _),
-    "q_wordpiece_encode_tokens" -> (qWordpieceEncodeTokens _),
-    "q_wordpiece_ids" -> (qWordpieceIds _),
-    "q_wordpiece_decode" -> (qWordpieceDecode _),
-    "q_bpe_decode" -> (qBpeDecode _),
-    "q_unigram_ids" -> (qUnigramIds _),
-    "q_tokenizer_types" -> (qTokenizerTypes _),
-    "q_jdbc_roundtrip" -> (qJdbcRoundtrip _),
-    "q_unigram_encode_parity" -> (qUnigramEncodeParity _),
-    "q_unicode_nfc" -> (qUnicodeNfc _),
-    "q_bpe_ids" -> (qBpeIds _),
-    "q_tok_fertility" -> (qTokFertility _),
-    "q_token_windows" -> (qTokenWindows _),
-    "q_pack_bpe" -> (qPackBpe _),
-    "q_pack_bins" -> (qPackBins _),
-    "q_length_buckets" -> (qLengthBuckets _),
-    "q_pack_decode" -> (qPackDecode _),
-    "q_epoch_shuffle" -> (qEpochShuffle _),
-    "q_multimodal_meta" -> (qMultimodalMeta _),
-    "q_image_phash" -> (qImagePhash _),
-    "q_audio_fingerprint" -> (qAudioFingerprint _),
-    "q_audio_fingerprint_incr" -> (qAudioFingerprintIncr _),
-    "q_video_fingerprint" -> (qVideoFingerprint _),
-    "q_video_fingerprint_incr" -> (qVideoFingerprintIncr _),
-    "q_media_dedup_mixed" -> (qMediaDedupMixed _),
-    "q_media_dedup_best" -> (qMediaDedupBest _),
-    "q_image_phash_incr" -> (qImagePhashIncr _),
-    "q_url_dedup" -> (qUrlDedup _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_k_anon" -> (qKAnon _),
-    "q_privacy_card" -> (qPrivacyCard _),
-    "q_fuzzy_join" -> (qFuzzyJoin _),
-    "q_k_suppress" -> (qKSuppress _),
-    "q_l_suppress" -> (qLSuppress _),
-    "q_dp_counts" -> (qDpCounts _),
-    "q_k_generalize" -> (qKGeneralize _),
-    "q_t_closeness" -> (qTCloseness _),
-    "q_fuzzy_serve" -> (qFuzzyServe _),
-    "q_rr_release" -> (qRrRelease _),
-    "q_rr_estimate" -> (qRrEstimate _),
-    "q_privacy_utility" -> (qPrivacyUtility _),
-    "q_mondrian" -> (qMondrian _),
-    "q_mondrian_gk" -> (qMondrianGk _),
-    "q_embed_cov" -> (qEmbedCov _),
-    "q_pca" -> (qPca _),
-    "q_pca2_parity" -> (qPca2Parity _),
-    "q_pca_trace_parity" -> (qPcaTraceParity _),
-    "q_pca_semdedup" -> (qPcaSemdedup _),
-    "q_vocab_drift" -> (qVocabDrift _),
-    "q_fuzzy_join2" -> (qFuzzyJoin2 _),
-    "q_fuzzy_two" -> (qFuzzyTwo _),
-  )
+  /** One declared query: its name, its plan and the DuckDB SQL that
+    * re-derives its result.
+    */
+  private[graft] final case class Q(name: String,
+      plan: (SparkSession, String) => DataFrame, oracle: String)
+
+  /** The declarations, checked: a name declared twice throws here rather
+    * than letting the later entry silently replace the earlier one.
+    */
+  private[graft] def registry(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty,
+      s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  // lazy: strict vals here would build `declared` before the SQL
+  // fragment vals below it are initialised, reading them as null
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(q => q.name -> q.plan).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    declared.map(q => q.name -> q.oracle).toMap
 
   // ---------------------------------------------------- oracle SQL fragments
   /** DuckDB rendering of [[TextOps.normalize]]. */
@@ -6865,23 +6688,24 @@ object SparkEntry {
       s"(CASE WHEN $vec[${b * bits + i}] > 0 THEN '1' ELSE '0' END)")
       .mkString(" || ")
 
-  def oracleSql: Map[String, String] = Map(
-    "mask_static" ->
+  /** Every query, declared once: name, plan function, oracle SQL. */
+  private lazy val declared: Seq[Q] = registry(Seq(
+    Q("mask_static", maskStatic,
       s"""SELECT c_custkey, c_name, c_nationkey, c_acctbal,
-         |'MASKED' AS c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_rownum" ->
+         |'MASKED' AS c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_rownum", maskRownum,
       s"""SELECT c_custkey,
          |concat('cust_', CAST(row_number() OVER (ORDER BY c_custkey) - 1 AS VARCHAR)) AS c_name,
-         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_hash" ->
+         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_hash", maskHash,
       s"""SELECT c_custkey,
          |concat(substr(md5(CAST(c_custkey AS VARCHAR)), 1, 12), '@example.com') AS c_name,
-         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_where" ->
+         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_where", maskWhere,
       s"""SELECT c_custkey, c_name, c_nationkey, c_acctbal,
          |CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END AS c_mktsegment
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_global_where" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_global_where", maskGlobalWhere,
       s"""SELECT c_custkey,
          |CASE WHEN c_acctbal > 0 AND c_nationkey <> 10
          |  THEN concat('X-', CAST(rn AS VARCHAR)) ELSE c_name END AS c_name,
@@ -6889,30 +6713,30 @@ object SparkEntry {
          |FROM (SELECT *, row_number() OVER (
          |  PARTITION BY CASE WHEN c_acctbal > 0 AND c_nationkey <> 10 THEN 1 ELSE 0 END
          |  ORDER BY c_custkey) - 1 AS rn FROM customer)
-         |ORDER BY c_custkey""".stripMargin,
-    "mask_unique" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("mask_unique", maskUnique,
       s"""SELECT c_custkey,
          |concat('user', CAST(c_custkey AS VARCHAR), '@example.com') AS c_name,
-         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_fields" ->
+         |c_nationkey, c_acctbal, c_mktsegment FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_fields", maskFields,
       s"""SELECT c_custkey,
          |concat('N', CAST(c_custkey AS VARCHAR)) AS c_name, c_nationkey, c_acctbal,
          |concat(concat('N', CAST(c_custkey AS VARCHAR)), '-SEG') AS c_mktsegment
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_blueprint_full" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_blueprint_full", maskBlueprintFull,
       s"""SELECT c_custkey,
          |concat('cust_', CAST(row_number() OVER (ORDER BY c_custkey) - 1 AS VARCHAR)) AS c_name,
          |c_nationkey, c_acctbal,
          |CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END AS c_mktsegment
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "fk_sync" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("fk_sync", fkSync,
       s"""SELECT o.o_orderkey,
          |COALESCE(m.newv, o.o_custkey) AS o_custkey,
          |o.o_orderstatus, o.o_totalprice, o.o_orderdate, o.o_orderpriority
          |FROM orders o LEFT JOIN
          |(SELECT c_custkey AS oldv, c_custkey + 1000000 AS newv FROM customer) m
-         |ON o.o_custkey = m.oldv ORDER BY o_orderkey""".stripMargin,
-    "q1_agg" ->
+         |ON o.o_custkey = m.oldv ORDER BY o_orderkey""".stripMargin),
+    Q("q1_agg", q1Agg,
       s"""SELECT l_returnflag, l_linestatus,
          |CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
          |CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
@@ -6920,33 +6744,33 @@ object SparkEntry {
          |  (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS sum_disc_price,
          |COUNT(*) AS count_order
          |FROM lineitem GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_broadcast" ->
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Q("q_join_broadcast", qJoinBroadcast,
       s"""SELECT n_name,
          |CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
          |COUNT(*) AS n_orders
          |FROM orders JOIN customer ON o_custkey = c_custkey
          |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_skew_join" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Q("q_skew_join", qSkewJoin,
       // the UNSALTED join: salting must be invisible in the result
       s"""SELECT o_orderkey, o_custkey, c_name
          |FROM orders JOIN customer ON o_custkey = c_custkey
-         |ORDER BY o_orderkey""".stripMargin,
-    "q_skew_agg" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Q("q_skew_agg", qSkewAgg,
       // the plain GROUP BY the partial->final split must reproduce
       s"""SELECT l_suppkey, COUNT(*) AS n
          |FROM lineitem GROUP BY l_suppkey
-         |ORDER BY l_suppkey""".stripMargin,
-    "q_hll_distinct" ->
+         |ORDER BY l_suppkey""".stripMargin),
+    Q("q_hll_distinct", qHllDistinct,
       // exact distinct re-derived; hll_ok pinned TRUE — the sketch
       // estimate must sit inside its documented 3·rsd accuracy band
       s"""SELECT o_orderpriority,
          |COUNT(DISTINCT o_custkey) AS n_exact,
          |TRUE AS hll_ok
          |FROM orders GROUP BY o_orderpriority
-         |ORDER BY o_orderpriority""".stripMargin,
-    "q_hll_merge" ->
+         |ORDER BY o_orderpriority""".stripMargin),
+    Q("q_hll_merge", qHllMerge,
       // exact distinct re-derived; the three booleans pinned TRUE —
       // flat union == tree union over the SAME shard sketches
       // (associativity, the distributed-merge contract), and every
@@ -6955,15 +6779,15 @@ object SparkEntry {
          |TRUE AS merge_exact_ok,
          |TRUE AS merged_bound_ok,
          |TRUE AS global_bound_ok
-         |FROM orders""".stripMargin,
-    "q_bucketed_join" ->
+         |FROM orders""".stripMargin),
+    Q("q_bucketed_join", qBucketedJoin,
       // the plain parquet join: the bucketed write->catalog->scan
       // round trip must be value-identical
       s"""SELECT c_mktsegment, COUNT(*) AS n_orders,
          |CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS revenue
          |FROM orders JOIN customer ON o_custkey = c_custkey
-         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q5_multijoin" ->
+         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Q("q5_multijoin", q5MultiJoin,
       s"""SELECT n_name,
          |CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) *
          |  (CAST(1 AS DECIMAL(12,2)) - CAST(l_discount AS DECIMAL(12,2)))) AS DOUBLE) AS revenue
@@ -6973,14 +6797,14 @@ object SparkEntry {
          |JOIN nation ON c_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
          |WHERE r_name = 'ASIA'
-         |GROUP BY n_name ORDER BY n_name""".stripMargin,
-    "q_window_topk" ->
+         |GROUP BY n_name ORDER BY n_name""".stripMargin),
+    Q("q_window_topk", qWindowTopk,
       s"""SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
          |SELECT o_custkey, o_orderkey, o_totalprice,
          |row_number() OVER (PARTITION BY o_custkey
          |  ORDER BY o_totalprice DESC, o_orderkey) AS rk
-         |FROM orders) WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-    "q_window_running" ->
+         |FROM orders) WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin),
+    Q("q_window_running", qWindowRunning,
       s"""SELECT o_custkey, o_orderkey,
          |CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
          |  PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -6989,44 +6813,44 @@ object SparkEntry {
          |  PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_order,
          |rank() OVER (
          |  PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rk
-         |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_sort_limit" ->
+         |FROM orders ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Q("q_sort_limit", qSortLimit,
       s"""SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
          |ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber
-         |LIMIT 100""".stripMargin,
-    "q_setops" ->
+         |LIMIT 100""".stripMargin),
+    Q("q_setops", qSetOps,
       s"""SELECT * FROM (
          |SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
          |UNION SELECT c_custkey FROM customer WHERE c_acctbal > 5000
          |EXCEPT SELECT c_custkey FROM customer WHERE c_nationkey = 0
-         |) ORDER BY c_custkey""".stripMargin,
-    "q_intersect" ->
+         |) ORDER BY c_custkey""".stripMargin),
+    Q("q_intersect", qIntersect,
       s"""SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'
          |INTERSECT SELECT c_custkey FROM customer WHERE c_acctbal > 0
-         |ORDER BY c_custkey""".stripMargin,
-    "q_cube" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("q_cube", qCube,
       s"""SELECT COALESCE(l_returnflag, 'ALL') AS l_returnflag,
          |COALESCE(l_linestatus, 'ALL') AS l_linestatus,
          |COUNT(*) AS n_rows,
          |CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
          |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_rollup" ->
+         |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Q("q_rollup", qRollup,
       s"""SELECT COALESCE(r_name, 'ALL') AS r_name, COALESCE(n_name, 'ALL') AS n_name,
          |COUNT(*) AS n_cust,
          |CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS sum_bal
          |FROM customer JOIN nation ON c_nationkey = n_nationkey
          |JOIN region ON n_regionkey = r_regionkey
-         |GROUP BY ROLLUP (r_name, n_name) ORDER BY r_name, n_name""".stripMargin,
-    "q_grouping_sets" ->
+         |GROUP BY ROLLUP (r_name, n_name) ORDER BY r_name, n_name""".stripMargin),
+    Q("q_grouping_sets", qGroupingSets,
       s"""SELECT COALESCE(l_returnflag, 'ALL') AS rf,
          |COALESCE(l_linestatus, 'ALL') AS ls,
          |COUNT(*) AS n_rows,
          |CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
          |FROM lineitem
          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-         |ORDER BY rf, ls""".stripMargin,
-    "q_window_dist" ->
+         |ORDER BY rf, ls""".stripMargin),
+    Q("q_window_dist", qWindowDist,
       // (price, orderkey) is a total order, so ntile/percent_rank/
       // cume_dist are engine-independent; the rank ratios are exact
       // int/int double divisions
@@ -7037,19 +6861,19 @@ object SparkEntry {
          |FROM orders
          |WINDOW w AS (PARTITION BY o_orderpriority
          |             ORDER BY o_totalprice, o_orderkey)
-         |ORDER BY o_orderkey""".stripMargin,
-    "q_pivot" ->
+         |ORDER BY o_orderkey""".stripMargin),
+    Q("q_pivot", qPivot,
       s"""SELECT l_returnflag,
          |CAST(SUM(CASE WHEN l_linestatus = 'F' THEN CAST(l_extendedprice AS DECIMAL(12,2)) END) AS DOUBLE) AS rev_f,
          |CAST(SUM(CASE WHEN l_linestatus = 'O' THEN CAST(l_extendedprice AS DECIMAL(12,2)) END) AS DOUBLE) AS rev_o
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_percentile" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Q("q_percentile", qPercentile,
       s"""SELECT l_returnflag,
          |quantile_cont(l_extendedprice, 0.25) AS p25,
          |quantile_cont(l_extendedprice, 0.5) AS p50,
          |quantile_cont(l_extendedprice, 0.75) AS p75
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_percentile_gk_parity" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Q("q_percentile_gk_parity", qPercentileGkParity,
       // the GK sketch is engine-specific, so the oracle pins the
       // CONTRACT, not the values: every (group, probability) estimate
       // must sit within its rank-error bound (checked Spark-side
@@ -7057,46 +6881,46 @@ object SparkEntry {
       s"""SELECT l_returnflag, unnest([0.25, 0.5, 0.75]) AS prob,
          |       true AS within_bound
          |FROM (SELECT DISTINCT l_returnflag FROM lineitem)
-         |ORDER BY l_returnflag, prob""".stripMargin,
-    "q_histogram" ->
+         |ORDER BY l_returnflag, prob""".stripMargin),
+    Q("q_histogram", qHistogram,
       s"""SELECT CAST(floor(l_extendedprice / 10000) AS BIGINT) AS price_bucket,
          |COUNT(*) AS n,
          |CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty
-         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_distinct_agg" ->
+         |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_distinct_agg", qDistinctAgg,
       s"""SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
          |COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n_rows
-         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_semi_join" ->
+         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Q("q_semi_join", qSemiJoin,
       s"""SELECT c_custkey, c_name FROM customer
          |WHERE EXISTS (SELECT 1 FROM orders
          |  WHERE o_custkey = c_custkey AND o_totalprice > 100000)
-         |ORDER BY c_custkey""".stripMargin,
-    "q_anti_join" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("q_anti_join", qAntiJoin,
       s"""SELECT c_custkey, c_name FROM customer
          |WHERE NOT EXISTS (SELECT 1 FROM orders
          |  WHERE o_custkey = c_custkey AND o_totalprice > 150000)
-         |ORDER BY c_custkey""".stripMargin,
-    "q_having" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("q_having", qHaving,
       s"""SELECT o_custkey, COUNT(*) AS n_orders,
          |CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS spend
          |FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 15
-         |ORDER BY o_custkey""".stripMargin,
-    "q_scalar_subquery" ->
+         |ORDER BY o_custkey""".stripMargin),
+    Q("q_scalar_subquery", qScalarSubquery,
       s"""SELECT c_custkey, c_name, c_acctbal FROM customer
          |WHERE c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)
          |  FROM customer)
-         |ORDER BY c_custkey""".stripMargin,
-    "q_json" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("q_json", qJson,
       s"""SELECT CAST(json_extract_string(props, '$$.k') AS INTEGER) % 10 AS k_mod,
          |COUNT(*) AS n,
          |CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_time_bucket" ->
+         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_time_bucket", qTimeBucket,
       s"""SELECT date_trunc('hour', ts) AS hour, event_type, COUNT(*) AS n,
          |CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_sessionize" ->
+         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Q("q_sessionize", qSessionize,
       s"""WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tsu FROM events),
          |m AS (SELECT user_id, event_id, tsu,
          |  CASE WHEN lag(tsu) OVER (PARTITION BY user_id ORDER BY tsu, event_id) IS NULL
@@ -7107,8 +6931,8 @@ object SparkEntry {
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM m)
          |SELECT user_id, session_id, COUNT(*) AS n_events,
          |  (MAX(tsu) - MIN(tsu)) // 1000 AS dur_ms
-         |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_asof_join" ->
+         |FROM s GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Q("q_asof_join", qAsofJoin,
       s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
          |o AS (SELECT o_custkey, epoch_us(o_orderdate) AS ot, o_orderkey, o_totalprice FROM orders),
          |m AS (SELECT e.event_id, e.user_id, e.ts_us, o.o_orderkey, o.o_totalprice,
@@ -7121,26 +6945,26 @@ object SparkEntry {
          |SELECT e.event_id, e.user_id, e.ts_us, NULL, NULL FROM e
          |WHERE NOT EXISTS (SELECT 1 FROM o
          |  WHERE o.o_custkey = e.user_id AND o.ot <= e.ts_us)
-         |ORDER BY event_id""".stripMargin,
-    "q_range_count" ->
+         |ORDER BY event_id""".stripMargin),
+    Q("q_range_count", qRangeCount,
       s"""WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events),
          |o AS (SELECT o_custkey, epoch_us(o_orderdate) AS ot FROM orders)
          |SELECT e.event_id, e.user_id, e.ts_us, COUNT(o.ot) AS n_orders_win
          |FROM e LEFT JOIN o ON o.o_custkey = e.user_id
          |  AND o.ot > e.ts_us - ${10000L * 24 * 3600 * 1000000L} AND o.ot <= e.ts_us
-         |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
-    "mask_fields_closure" ->
+         |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin),
+    Q("mask_fields_closure", maskFieldsClosure,
       s"""SELECT c_custkey,
          |concat('N', CAST(c_custkey AS VARCHAR)) AS c_name, c_nationkey, c_acctbal,
          |concat('N', CAST(c_custkey AS VARCHAR), '|', c_mktsegment) AS c_mktsegment
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "mask_composite_pk" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("mask_composite_pk", maskCompositePk,
       s"""SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity,
          |l_extendedprice, l_discount, l_tax,
          |concat('F', CAST(row_number() OVER (ORDER BY ${lineitemOrder.mkString(", ")}) - 1 AS VARCHAR)) AS l_returnflag,
          |l_linestatus, l_shipdate
-         |FROM lineitem ORDER BY ${lineitemOutOrder.mkString(", ")}""".stripMargin,
-    "mask_generators" -> {
+         |FROM lineitem ORDER BY ${lineitemOutOrder.mkString(", ")}""".stripMargin),
+    Q("mask_generators", maskGenerators, {
       val fpool = inList(Gen.firstNamePool)
       val lpool = inList(Gen.lastNamePool)
       val seed = "md5(CAST(c_custkey AS VARCHAR))"
@@ -7154,8 +6978,8 @@ object SparkEntry {
          |c_nationkey, c_acctbal,
          |lower($first) || '.' || CAST(c_custkey AS VARCHAR) || '@example.com' AS c_mktsegment
          |FROM customer ORDER BY c_custkey""".stripMargin
-    },
-    "mask_generator_oracle" -> {
+    }),
+    Q("mask_generator_oracle", maskGeneratorOracle, {
       val pool = inList(Gen.firstNamePool)
       val seed = "md5(CAST(c_custkey AS VARCHAR))"
       val idx = s"CAST((${nibSql(seed, 1)} * 16 + ${nibSql(seed, 2)}) " +
@@ -7163,8 +6987,8 @@ object SparkEntry {
       s"""SELECT c_custkey, list_extract([$pool], $idx) AS c_name,
          |c_nationkey, c_acctbal, c_mktsegment
          |FROM customer ORDER BY c_custkey""".stripMargin
-    },
-    "mask_format_preserving" -> {
+    }),
+    Q("mask_format_preserving", maskFormatPreserving, {
       // per character: shift = first hex-nibble pair of
       // md5(seed || '#' || i); digits rotate mod 10, letters mod 26
       // within their case, everything else passes through — exactly
@@ -7196,8 +7020,8 @@ object SparkEntry {
          |COALESCE(a.masked, s.c_name) AS c_name_masked
          |FROM src s LEFT JOIN agg a USING (c_custkey)
          |ORDER BY c_custkey""".stripMargin
-    },
-    "mask_fp_sync" -> {
+    }),
+    Q("mask_fp_sync", maskFpSync, {
       // the masked custkey re-derived from the CUSTOMER table (digit
       // strings: only the mod-10 branch fires), joined to the raw FK
       // order counts — if either table's independent masking drifted,
@@ -7222,8 +7046,8 @@ object SparkEntry {
          |TRUE AS sync_ok
          |FROM j JOIN mk USING (c_custkey)
          |ORDER BY c_custkey""".stripMargin
-    },
-    "mask_date_shift" -> {
+    }),
+    Q("mask_date_shift", maskDateShift, {
       // the same 48-bit md5 coin as q_rr_release, keyed per customer;
       // the offset and the day-granular shift replay exactly
       val b = bucket48OfSql(
@@ -7232,14 +7056,14 @@ object SparkEntry {
          |o_orderdate + (CAST($b % 181 AS INT) - 90)
          |  * INTERVAL 1 DAY AS o_orderdate_shifted
          |FROM orders ORDER BY o_orderkey""".stripMargin
-    },
-    "q_dedup_exact" ->
+    }),
+    Q("q_dedup_exact", qDedupExact,
       s"""SELECT md5($normSql) AS content_hash, COUNT(*) AS n_copies,
          |MIN(doc_id) AS keep_id
          |FROM (SELECT * FROM documents
          |      UNION ALL SELECT * FROM documents WHERE doc_id % 50 = 0)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_dedup_exact_best" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_dedup_exact_best", qDedupExactBest,
       // keep-best exact dedup: content hash groups, per-group max
       // external score (mirror source outranks originals), min-id
       // tie-break — the survivor set re-derived end to end
@@ -7256,8 +7080,8 @@ object SparkEntry {
          |  FROM h JOIN top t ON t.ch = h.ch AND h.s = t.m GROUP BY h.ch)
          |SELECT h.doc_id, h.source FROM h
          |JOIN keep k ON k.ch = h.ch AND k.keep_id = h.doc_id
-         |ORDER BY doc_id""".stripMargin,
-    "q_dedup_near_best" ->
+         |ORDER BY doc_id""".stripMargin),
+    Q("q_dedup_near_best", qDedupNearBest,
       // keep-best near dedup: the q_dedup_near pair graph, the shared
       // recursive component closure, quality scores (the bit-pinned
       // q_quality formula) and the argmax survivor with min-id ties
@@ -7281,15 +7105,15 @@ object SparkEntry {
          |  WHERE id NOT IN (SELECT id FROM keep))
          |SELECT d.doc_id, d.lang FROM documents d
          |WHERE d.doc_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_dedup_near" ->
+         |ORDER BY d.doc_id""".stripMargin),
+    Q("q_dedup_near", qDedupNear,
       s"""WITH $nearDupCtes
          |SELECT i.id_a, i.id_b, i.n_inter,
          |  CAST(i.n_inter AS DOUBLE) / (za.sz + zb.sz - i.n_inter) AS jaccard
          |FROM inter i JOIN sz za ON za.doc_id = i.id_a
          |JOIN sz zb ON zb.doc_id = i.id_b
          |WHERE CAST(i.n_inter AS DOUBLE) / (za.sz + zb.sz - i.n_inter) >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin,
+         |ORDER BY id_a, id_b""".stripMargin),
     // exact substring dedup: occurrence marking (count + canonical
     // row_number over the gram hash), removal spans, gaps-and-islands
     // merge, complement segments, ordered string_agg reassembly — the
@@ -7297,7 +7121,7 @@ object SparkEntry {
     // empty segments: substring(_, k, 0) = '' keeps the all-removed
     // doc's group alive so it cleans to '' rather than COALESCE-ing
     // back to the original.
-    "q_substring_dedup" ->
+    Q("q_substring_dedup", qSubstringDedup,
       """WITH occ AS (
         |  SELECT doc_id, CAST(p AS INTEGER) AS pos,
         |         md5(substring(text, CAST(p AS INTEGER), 40)) AS g
@@ -7336,11 +7160,11 @@ object SparkEntry {
         |       CAST(length(d.text) - length(COALESCE(c.ct, d.text))
         |         AS BIGINT) AS n_removed_chars
         |FROM documents d LEFT JOIN cleaned c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     // span decontamination: distinct benchmark grams, semi-join marking
     // over the corpus occurrences, then the same island-merge +
     // complement + ordered reassembly as q_substring_dedup
-    "q_decontaminate_spans" ->
+    Q("q_decontaminate_spans", qDecontaminateSpans,
       """WITH bocc AS (
         |  SELECT DISTINCT md5(substring(text, CAST(p AS INTEGER), 25))
         |    AS g
@@ -7381,12 +7205,12 @@ object SparkEntry {
         |       CAST(length(d.text) - length(COALESCE(c.ct, d.text))
         |         AS BIGINT) AS n_removed_chars
         |FROM corp d LEFT JOIN cleaned c ON c.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
+        |ORDER BY d.doc_id""".stripMargin),
     // line-level dedup: page synthesis (header + ORDER BY doc_id body +
     // footer, %10==3 docs guesting on the next page), per-line doc
     // frequency on the NORMALIZED line, drop every occurrence above
     // df 1, ordered string_agg reassembly
-    "q_line_dedup" ->
+    Q("q_line_dedup", qLineDedup,
       """WITH members AS (
         |  SELECT doc_id % 25 AS page_id, doc_id, text FROM documents
         |  UNION ALL
@@ -7425,8 +7249,8 @@ object SparkEntry {
         |       CAST(len(string_split(p.text, chr(10)))
         |         - COALESCE(b.n_kept, 0) AS BIGINT) AS n_dropped_lines
         |FROM pages p LEFT JOIN built b USING (page_id)
-        |ORDER BY p.page_id""".stripMargin,
-    "q_dedup_clusters" ->
+        |ORDER BY p.page_id""".stripMargin),
+    Q("q_dedup_clusters", qDedupClusters,
       // transitive closure as the semantic spec: cluster id = MIN
       // reachable doc id over the verified near-dup pair graph — the
       // recursive CTE is DuckDB's way to say what the distributed
@@ -7444,13 +7268,13 @@ object SparkEntry {
          |  UNION
          |  SELECT rc.id, e.dst FROM reach rc JOIN edges e ON e.src = rc.r)
          |SELECT id AS doc_id, MIN(r) AS cluster_id
-         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-    "q_dedup_incr" -> dedupIncrOracleSql,
+         |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin),
+    Q("q_dedup_incr", qDedupIncr, dedupIncrOracleSql),
     // the SAME oracle verbatim: after folding the second even half into
     // the persisted layout, the appended index must answer EXACTLY like
     // a fresh build over the full even corpus
-    "q_dedup_append" -> dedupIncrOracleSql,
-    "q_text_stats" ->
+    Q("q_dedup_append", qDedupAppend, dedupIncrOracleSql),
+    Q("q_text_stats", qTextStats,
       // CAST SUM/MAX to BIGINT: DuckDB SUM(integer) yields HUGEINT (float64
       // in pandas) and MAX(len) INT vs Spark's int64 — dtype-exact both sides
       s"""SELECT lang, COUNT(*) AS n_docs,
@@ -7458,15 +7282,15 @@ object SparkEntry {
          |CAST(SUM(len($toksSql)) AS BIGINT) AS sum_tokens,
          |CAST(MAX(len($toksSql)) AS BIGINT) AS max_tokens,
          |COUNT(DISTINCT source) AS n_sources
-         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q_subword" ->
+         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Q("q_subword", qSubword,
       // \p{L}/\p{N} are Unicode classes in both Java regex and RE2, and
       // the empty-token filter makes split-edge semantics irrelevant
       s"""SELECT doc_id, len($toksSql) AS n_tokens,
          |len(list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'),
          |    x -> len(x) > 0)) AS n_subwords
-         |FROM documents ORDER BY doc_id""".stripMargin,
-    "q_lang_id" -> {
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("q_lang_id", qLangId, {
       def hits(words: Seq[String]) =
         s"len(list_filter($toksSql, x -> x IN (${inList(words)})))"
       s"""SELECT doc_id,
@@ -7481,19 +7305,19 @@ object SparkEntry {
          |     WHEN ${hits(TextOps.langProfiles("es"))} > 0 THEN 'es'
          |     ELSE 'und' END AS lang_pred
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
+    }),
     // feature projection + score formula are the SHARED renderings
     // (qualityFeatSelect / qualityScoreSql) q_curation_sem's keep-set
     // CTE also uses — one copy, no drift
-    "q_quality" ->
+    Q("q_quality", qQuality,
       s"""WITH f AS (SELECT $qualityFeatSelect
          |FROM documents)
          |SELECT doc_id, n_tokens, stop_hits, n_punct,
          |  $qualityScoreSql AS quality
-         |FROM f ORDER BY doc_id""".stripMargin,
+         |FROM f ORDER BY doc_id""".stripMargin),
     // Gopher rule filter: int/int double divisions only, so every
     // feature bit-matches; the stop-hit list is the en profile
-    "q_gopher_rules" ->
+    Q("q_gopher_rules", qGopherRules,
       s"""WITH $gopherFeatCtes
          |SELECT doc_id, n_words, mean_word_len, symbol_word_ratio,
          |  alpha_word_frac, bullet_line_frac, ellipsis_line_frac,
@@ -7506,11 +7330,11 @@ object SparkEntry {
          |  alpha_word_frac >= 0.8 AS ok_alpha,
          |  stop_hits >= 1 AS ok_stopwords,
          |  $gopherKeepSql AS keep
-         |FROM feat ORDER BY doc_id""".stripMargin,
+         |FROM feat ORDER BY doc_id""".stripMargin),
     // the per-source data card: every double derived from exact integer
     // aggregates AFTER the groupBy, so unordered float summation never
     // enters the comparison
-    "q_data_card" ->
+    Q("q_data_card", qDataCard,
       s"""WITH $gopherFeatCtes,
          |base AS (SELECT d.source, d.lang,
          |    CAST(len($toksSql) AS BIGINT) AS toks,
@@ -7537,16 +7361,16 @@ object SparkEntry {
          |  CAST(SUM(toks) AS DOUBLE) / COUNT(*) AS mean_tokens,
          |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS DOUBLE)
          |    / COUNT(*) AS gopher_keep_frac
-         |FROM base GROUP BY source ORDER BY source""".stripMargin,
-    "q_repetition" ->
+         |FROM base GROUP BY source ORDER BY source""".stripMargin),
+    Q("q_repetition", qRepetition,
       s"""WITH $repetitionCtes
          |SELECT ws.doc_id, ws.n_tokens, ws.n_distinct_tokens,
          |  ws.top_word_frac, COALESCE(bs.dup_bigram_frac, 0.0) AS dup_bigram_frac
          |FROM ws LEFT JOIN bs ON bs.doc_id = ws.doc_id
-         |ORDER BY ws.doc_id""".stripMargin,
+         |ORDER BY ws.doc_id""".stripMargin),
     // the FULL Gopher filter: the shared feature CTEs joined with the
     // shared repetition CTEs, two caps, keep tightened to all nine
-    "q_gopher_full" ->
+    Q("q_gopher_full", qGopherFull,
       s"""WITH $gopherFeatCtes,
          |$repetitionCtes,
          |rep AS (SELECT ws.doc_id, ws.top_word_frac,
@@ -7568,9 +7392,9 @@ object SparkEntry {
          |  ($gopherKeepSql) AND rep.top_word_frac <= 0.11
          |    AND rep.dup_bigram_frac <= 0.05 AS keep
          |FROM feat JOIN rep ON rep.doc_id = feat.doc_id
-         |ORDER BY feat.doc_id""".stripMargin,
+         |ORDER BY feat.doc_id""".stripMargin),
     // C4: pages rebuilt line-for-line with the same doc_id-keyed
-    "q_html_extract" -> {
+    Q("q_html_extract", qHtmlExtract, {
       // rebuild the SAME shell, replay the SAME strip chain pattern by
       // pattern (the shared htmlStripChain constants rendered as RE2 —
       // the chain is written in the Java∩RE2 subset for exactly this)
@@ -7584,10 +7408,10 @@ object SparkEntry {
       }
       s"""SELECT doc_id, $stripped AS extracted
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
+    }),
     // injections, then the full decision table — line keeps, cleaned
     // text (byte-compared), sentence counts, page verdicts
-    "q_c4_rules" ->
+    Q("q_c4_rules", qC4Rules,
       """WITH lns AS (
         |  SELECT doc_id % 25 AS page_id, doc_id,
         |    (CASE WHEN doc_id % 19 = 0 THEN 'too short' ELSE text END)
@@ -7647,12 +7471,12 @@ object SparkEntry {
         |      - len(regexp_replace(b.clean_text, '[.!?]', '', 'g')))
         |      >= 11 AS keep
         |FROM pages p JOIN built b USING (page_id)
-        |ORDER BY p.page_id""".stripMargin,
+        |ORDER BY p.page_id""".stripMargin),
     // the composed C4 -> CCNet recipe: the q_c4_rules page build (plus
     // the prose-shaped boilerplate header and % 10 = 3 guest lines),
     // C4 line-rewrite + page-drop, then CCNet line dedup over the
     // SURVIVORS' cleaned text — both stages re-derived end to end
-    "q_c4_ccnet" ->
+    Q("q_c4_ccnet", qC4Ccnet,
       """WITH lns AS (
         |  SELECT doc_id % 25 AS page_id, doc_id,
         |    (CASE WHEN doc_id % 19 = 0 THEN 'too short' ELSE text END)
@@ -7731,8 +7555,8 @@ object SparkEntry {
         |  CAST(len(string_split(c.text, chr(10)))
         |    - COALESCE(b.n_kept, 0) AS BIGINT) AS n_dropped_lines
         |FROM c4kept c LEFT JOIN built b USING (page_id)
-        |ORDER BY c.page_id""".stripMargin,
-    "q_pii" -> {
+        |ORDER BY c.page_id""".stripMargin),
+    Q("q_pii", qPii, {
       import graft.pipeline.TextOps.{emailRe, urlRe, phoneRe, ccRe, ipv4Re}
       s"""WITH synth AS (SELECT c_custkey,
          |  'reach user' || CAST(c_custkey AS VARCHAR) || '@example.com or call 555-' ||
@@ -7755,16 +7579,16 @@ object SparkEntry {
          |  CAST(len(regexp_extract_all(text, '$ipv4Re')) AS BIGINT) AS n_ips,
          |  CAST(len(regexp_extract_all(text, '$phoneRe')) AS BIGINT) AS n_phones
          |FROM synth ORDER BY c_custkey""".stripMargin
-    },
-    "q_decontaminate" ->
+    }),
+    Q("q_decontaminate", qDecontaminate,
       s"""WITH $shingleCte,
          |ca AS (SELECT doc_id AS id_a, shingle FROM sh WHERE doc_id % 10 <> 0),
          |cb AS (SELECT doc_id AS id_b, shingle FROM sh WHERE doc_id % 10 = 0)
          |SELECT ca.id_a, cb.id_b, COUNT(*) AS n_shared
          |FROM ca JOIN cb USING (shingle)
          |GROUP BY 1, 2 HAVING COUNT(*) >= 3
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q_zorder" -> {
+         |ORDER BY id_a, id_b""".stripMargin),
+    Q("q_zorder", qZorder, {
       // recompute the interleave bit by bit: ((x>>i)&1) << (2i) lanes x,
       // ((y>>i)&1) << (2i+1) lanes y
       val terms = (for {
@@ -7776,8 +7600,8 @@ object SparkEntry {
          |  l_partkey % 1024 AS x, l_suppkey % 1024 AS y FROM lineitem)
          |SELECT l_orderkey, l_linenumber, CAST($terms AS BIGINT) AS zval
          |FROM b ORDER BY l_orderkey, l_linenumber""".stripMargin
-    },
-    "q_decontaminate_bloom" ->
+    }),
+    Q("q_decontaminate_bloom", qDecontaminateBloom,
       // the EXACT overlap — the Bloom stage is a prefilter that must
       // not change the answer (no false negatives; verify restores set
       // equality over the superset it keeps)
@@ -7787,12 +7611,12 @@ object SparkEntry {
          |SELECT ca.id_a, cb.id_b, COUNT(*) AS n_shared
          |FROM ca JOIN cb USING (shingle)
          |GROUP BY 1, 2 HAVING COUNT(*) >= 2
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q_vocab" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Q("q_vocab", qVocab,
       s"""SELECT token, COUNT(*) AS n_total, COUNT(DISTINCT doc_id) AS n_docs
          |FROM (SELECT doc_id, unnest($toksSql) AS token FROM documents)
-         |GROUP BY token ORDER BY n_docs DESC, token LIMIT 20""".stripMargin,
-    "q_heavy_hitters" ->
+         |GROUP BY token ORDER BY n_docs DESC, token LIMIT 20""".stripMargin),
+    Q("q_heavy_hitters", qHeavyHitters,
       // exact corpus totals + the guaranteed-set size re-derived; the
       // four Misra-Gries contract booleans pinned TRUE (the sketch's
       // reported item set is partition-dependent near the error floor,
@@ -7816,8 +7640,8 @@ object SparkEntry {
          |  TRUE AS all_underestimate,
          |  TRUE AS all_within_bound,
          |  TRUE AS guaranteed_present
-         |FROM tot""".stripMargin,
-    "q_tfidf" ->
+         |FROM tot""".stripMargin),
+    Q("q_tfidf", qTfidf,
       s"""WITH toks AS (SELECT doc_id, unnest($toksSql) AS token FROM documents),
          |tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
          |dfq AS (SELECT token, COUNT(*) AS dfreq FROM tf GROUP BY 1),
@@ -7827,15 +7651,15 @@ object SparkEntry {
          |      FROM tf JOIN dfq USING (token) CROSS JOIN n)
          |SELECT doc_id, token, tf, dfreq, weight FROM w
          |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY weight DESC, token) = 1
-         |ORDER BY doc_id""".stripMargin,
-    "q_fingerprint" ->
+         |ORDER BY doc_id""".stripMargin),
+    Q("q_fingerprint", qFingerprint,
       s"""WITH $shingleCte,
          |h AS (SELECT DISTINCT doc_id, md5(shingle) AS h FROM sh),
          |top AS (SELECT doc_id, h FROM h
          |        QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY h) <= 4)
          |SELECT doc_id, string_agg(h, ',' ORDER BY h) AS fingerprint
-         |FROM top GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_winnow" ->
+         |FROM top GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Q("q_winnow", qWinnow,
       // the same winnowing selection: md5 of every 8-char gram of the
       // normalized text, min over each 4-gram window (frames past the
       // last full window are excluded — i <= cnt-3 — except the single
@@ -7854,8 +7678,8 @@ object SparkEntry {
          |      FROM h)
          |SELECT DISTINCT doc_id, mh AS fp FROM w
          |WHERE i <= greatest(cnt - 3, 1)
-         |ORDER BY doc_id, fp""".stripMargin,
-    "q_winnow_overlap" ->
+         |ORDER BY doc_id, fp""".stripMargin),
+    Q("q_winnow_overlap", qWinnowOverlap,
       // q_winnow's selection CTE over the whole corpus, self-joined on
       // the fingerprint across the %10 corpus/benchmark split, pair
       // counts with the >= 20 floor (the fixture corpus shares heavy
@@ -7879,15 +7703,15 @@ object SparkEntry {
          |FROM sel a JOIN sel b ON a.fp = b.fp
          |WHERE a.doc_id % 10 <> 0 AND b.doc_id % 10 = 0
          |GROUP BY 1, 2 HAVING COUNT(*) >= 20
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q_heavy" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Q("q_heavy", qHeavy,
       // exact regime (k=64 > 31 distinct fixture tokens): the sketch
       // equals the exact token-frequency table
       s"""WITH toks AS (SELECT unnest($toksSql) AS token FROM documents)
          |SELECT token, CAST(COUNT(*) AS BIGINT) AS est FROM toks
          |WHERE token <> ''
-         |GROUP BY token ORDER BY est DESC, token""".stripMargin,
-    "q_pack" ->
+         |GROUP BY token ORDER BY est DESC, token""".stripMargin),
+    Q("q_pack", qPack,
       // offset packing: tokens laid out per language shard in doc_id
       // order; offset = tokens before the doc, bin = floor(offset /
       // budget). `/` is double division in both engines, so floor +
@@ -7900,8 +7724,8 @@ object SparkEntry {
          |  FROM tok)
          |SELECT doc_id, lang, tokens, "offset",
          |  CAST(floor("offset" / 256) AS BIGINT) AS bin
-         |FROM ofs ORDER BY lang, doc_id""".stripMargin,
-    "q_pack_chunks" ->
+         |FROM ofs ORDER BY lang, doc_id""".stripMargin),
+    Q("q_pack_chunks", qPackChunks,
       // the boundary-splitting pieces: for each doc, one row per bin in
       // [floor(offset/B), floor((offset+tokens-1)/B)]; the piece starts
       // at max(offset, bin·B) and ends at min(offset+tokens, (bin+1)·B)
@@ -7919,8 +7743,8 @@ object SparkEntry {
          |  GREATEST("offset", piece_bin * 256) - "offset" AS doc_from,
          |  LEAST("offset" + tokens, (piece_bin + 1) * 256)
          |    - GREATEST("offset", piece_bin * 256) AS piece_tokens
-         |FROM pieces ORDER BY lang, doc_id, piece_bin""".stripMargin,
-    "q_pack_boundaries" ->
+         |FROM pieces ORDER BY lang, doc_id, piece_bin""".stripMargin),
+    Q("q_pack_boundaries", qPackBoundaries,
       // the chunk pieces again, plus the in-bin prefix sum: bin_from =
       // tokens of earlier pieces in the SAME (lang, bin), ordered by
       // offset + doc_from — the order the bin's ids concatenate in
@@ -7943,11 +7767,11 @@ object SparkEntry {
          |  CAST(COALESCE(SUM(piece_tokens) OVER (PARTITION BY lang, bin
          |    ORDER BY "offset" + doc_from
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS bin_from
-         |FROM cut ORDER BY lang, bin, bin_from, doc_id""".stripMargin,
-    "q_simhash" ->
+         |FROM cut ORDER BY lang, bin, bin_from, doc_id""".stripMargin),
+    Q("q_simhash", qSimhash,
       s"""WITH $simhash16Cte
-         |SELECT doc_id, simhash FROM sh16 ORDER BY doc_id""".stripMargin,
-    "q_simhash_near" ->
+         |SELECT doc_id, simhash FROM sh16 ORDER BY doc_id""".stripMargin),
+    Q("q_simhash_near", qSimhashNear,
       // the oracle is the SEMANTIC spec — all pairs at Hamming distance ≤1
       // (an n² filter DuckDB happily runs at oracle scale); the Spark side
       // must produce the identical set through the banded bucket join
@@ -7956,22 +7780,22 @@ object SparkEntry {
          |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
          |FROM sh16 a JOIN sh16 b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.simhash, b.simhash)) <= 1
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q_winnow64_parity" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Q("q_winnow64_parity", qWinnow64Parity,
       // the production xxhash64 winnowing selection has no ANSI-SQL
       // oracle; the check is Spark-side (native codegen path vs staged
       // HOF fold, per doc) and the oracle pins the CONTRACT: every
       // fixture document compared, every one matching
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents",
-    "q_simhash64_parity" ->
+      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents"),
+    Q("q_simhash64_parity", qSimhash64Parity,
       // same pattern for the 64-bit SimHash: aggregate-shaped vs
       // per-row Column re-derivations must agree on every document
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents",
-    "q_substring_dedup64_parity" ->
+      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents"),
+    Q("q_substring_dedup64_parity", qSubstringDedup64Parity,
       // same pattern for 64-bit substring dedup: md5 and xxhash64
       // removal intervals must agree per document across the fixture
-      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents",
-    "q_sim_topk" ->
+      "SELECT count(*) AS n_docs, count(*) AS n_match FROM documents"),
+    Q("q_sim_topk", qSimTopk,
       s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
          |ex AS (SELECT e.vec_id, e.label, unnest(e.embedding) AS v,
          |         unnest(generate_series(1, len(e.embedding))) AS i, q.qe AS qe
@@ -7982,8 +7806,8 @@ object SparkEntry {
          |    SUM(CAST(qe[i] AS DOUBLE) * CAST(qe[i] AS DOUBLE) ORDER BY i) AS nq
          |  FROM ex GROUP BY vec_id, label)
          |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
-         |FROM dots ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
-    "q_sim_lsh" -> {
+         |FROM dots ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin),
+    Q("q_sim_lsh", qSimLsh, {
       val orChain = (0 until 16)
         .map(b => s"(${bandSql("e.embedding", b, 4)}) = (${bandSql("q.qe", b, 4)})")
         .mkString(" OR ")
@@ -7999,32 +7823,34 @@ object SparkEntry {
          |  FROM ex GROUP BY vec_id, label)
          |SELECT vec_id, label, dp / (sqrt(nv) * sqrt(nq)) AS cosine
          |FROM dots ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-    },
-    "q_sim_ivf" -> simIvfOracleSql(centPred = "TRUE"),
+    }),
+    Q("q_sim_ivf", qSimIvf, simIvfOracleSql(centPred = "TRUE")),
     // the appended-index probe: centroids seed from the EVEN half (the
     // initial build), assignment/scoring cover the full corpus — the
     // rest of the pipeline SQL is shared verbatim with q_sim_ivf
-    "q_sim_ivf_append" -> simIvfOracleSql(centPred = "vec_id % 2 = 0"),
+    Q("q_sim_ivf_append", qSimIvfAppend,
+      simIvfOracleSql(centPred = "vec_id % 2 = 0")),
     // the re-clustered quantizer from scratch: seed cut = the
     // production ceiling ⌈count/24⌉ over the full corpus (the
     // q_semdedup_auto sizing rule), assignment + probe re-derived
-    "q_ivf_recluster" -> simIvfOracleSql(centPred = "TRUE",
+    Q("q_ivf_recluster", qIvfRecluster, simIvfOracleSql(centPred = "TRUE",
       centLimit = "(SELECT CAST(CEIL(COUNT(*) / 24.0) AS BIGINT) " +
-        "FROM embeddings WHERE vec_id <> 0)"),
+        "FROM embeddings WHERE vec_id <> 0)")),
     // the TWO-LEVEL re-cluster: the whole grouped quantizer re-derived
     // from scratch (semDedup2lCtes over the query-less corpus), then
     // the shared nProbe=2 probe tail over the two-level assignment
-    "q_ivf_recluster_2l" ->
+    Q("q_ivf_recluster_2l", qIvfRecluster2l,
       s"""WITH ${semDedup2lCtes(24, "vec_id <> 0")},
          |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
          |corpusl AS (SELECT vec_id, label, embedding FROM embeddings
          |            WHERE vec_id <> 0),
-         |${simIvfProbeTail("corpusl")}""".stripMargin,
-    "q_ivf_int8" -> ivfInt8OracleSql(centPred = "TRUE"),
+         |${simIvfProbeTail("corpusl")}""".stripMargin),
+    Q("q_ivf_int8", qIvfInt8, ivfInt8OracleSql(centPred = "TRUE")),
     // the int8 append row: centroids frozen at the even half, every
     // appended row's quantization re-derived — shares the pipeline SQL
-    "q_ivf_int8_append" -> ivfInt8OracleSql(centPred = "vec_id % 2 = 0"),
-    "q_ivf_int8_batch" ->
+    Q("q_ivf_int8_append", qIvfInt8Append,
+      ivfInt8OracleSql(centPred = "vec_id % 2 = 0")),
+    Q("q_ivf_int8_batch", qIvfInt8Batch,
       // q_ivf_int8's dequantized scoring in q_sim_ivf_batch's query-set
       // shape: per-query probes on full-precision centroids, final
       // cosine over dq = CAST(round(v/scale) AS TINYINT)·scale
@@ -8078,8 +7904,8 @@ object SparkEntry {
          |FROM fd
          |QUALIFY row_number() OVER (PARTITION BY qid
          |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin,
-    "q_sim_ivf_batch" ->
+         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+    Q("q_sim_ivf_batch", qSimIvfBatch,
       // the batch form of q_sim_ivf (see simIvfBatchCtes)
       s"""WITH $simIvfBatchCtes
          |SELECT qid AS query_id, vec_id, label,
@@ -8087,14 +7913,14 @@ object SparkEntry {
          |FROM fd
          |QUALIFY row_number() OVER (PARTITION BY qid
          |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin,
-    "q_ann_recall" ->
+         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+    Q("q_ann_recall", qAnnRecall,
       // per-query intersection of the nProbe=2 IVF top-5 (the shared
       // batch chain) with a BRUTE-FORCE exact top-5 derived
       // independently over the full corpus — same tie rules
       s"""WITH $simIvfBatchCtes,
-         |${annRecallTail("corpus")}""".stripMargin,
-    "q_ann_recall_2l" ->
+         |${annRecallTail("corpus")}""".stripMargin),
+    Q("q_ann_recall_2l", qAnnRecall2l,
       // the grouping-cost audit: the TWO-LEVEL quantizer and a FLAT
       // quantizer at the SAME cell count (LIMIT = the landed 2l
       // centroid count) probed with the SAME nProbe=2 budget against
@@ -8139,9 +7965,9 @@ object SparkEntry {
          |FROM exact e
          |LEFT JOIN approx a2 ON a2.qid = e.qid AND a2.vec_id = e.vec_id
          |LEFT JOIN zapprox af ON af.qid = e.qid AND af.vec_id = e.vec_id
-         |GROUP BY e.qid ORDER BY query_id""".stripMargin,
+         |GROUP BY e.qid ORDER BY query_id""".stripMargin),
 
-    "q_pq" ->
+    Q("q_pq", qPq,
       // mirrors Pq.train(iters=0)/encode/pqTopK exactly: codebook
       // centroid c of subspace j = positions j*8+1..j*8+8 of the
       // (c+1)-th lowest-id corpus vector; code = argmin squared L2
@@ -8174,13 +8000,14 @@ object SparkEntry {
          |  GROUP BY c.vec_id)
          |SELECT e.vec_id, e.label, s.pq_score
          |FROM score s JOIN corpus e ON e.vec_id = s.vec_id
-         |ORDER BY s.pq_score DESC, s.vec_id LIMIT 10""".stripMargin,
-    "q_ivf_pq" -> ivfPqOracleSql(buildPred = "TRUE"),
+         |ORDER BY s.pq_score DESC, s.vec_id LIMIT 10""".stripMargin),
+    Q("q_ivf_pq", qIvfPq, ivfPqOracleSql(buildPred = "TRUE")),
     // the PQ append row: centroid AND codebook seeds frozen at the
     // even half; the appended rows’ sidecar-codebook encoding is
     // re-derived — shares the pipeline SQL verbatim
-    "q_ivf_pq_append" -> ivfPqOracleSql(buildPred = "vec_id % 2 = 0"),
-    "q_ivf_pq_batch" ->
+    Q("q_ivf_pq_append", qIvfPqAppend,
+      ivfPqOracleSql(buildPred = "vec_id % 2 = 0")),
+    Q("q_ivf_pq_batch", qIvfPqBatch,
       // q_ivf_pq generalised to a query SET (the 3 vec_id<3 vectors,
       // corpus vec_id >= 3 as q_sim_ivf_batch): per-query probes (ties
       // to the LOWER cell), query-independent codes (argmin squared L2,
@@ -8256,8 +8083,8 @@ object SparkEntry {
          |FROM fdb
          |QUALIFY row_number() OVER (PARTITION BY qid
          |  ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC) <= 5
-         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin,
-    "q_sample" -> {
+         |ORDER BY query_id, cosine DESC, vec_id""".stripMargin),
+    Q("q_sample", qSample, {
       // 16-bit bucket from the first four md5 nibbles of the stringified
       // key; thresholds are round(rate * 65536)
       val h = "md5(CAST(doc_id AS VARCHAR))"
@@ -8267,8 +8094,8 @@ object SparkEntry {
          |WHERE $bucket < CASE lang WHEN 'en' THEN 32768 WHEN 'es' THEN 65536
          |                          WHEN 'de' THEN 16384 ELSE 6554 END
          |ORDER BY doc_id""".stripMargin
-    },
-    "q_sample_weighted" ->
+    }),
+    Q("q_sample_weighted", qSampleWeighted,
       // 48-bit bucket from the first twelve md5 nibbles; keep iff
       // bucket < (tokens * c) * 2^48 — multiplications only, IEEE-exact
       // on both engines, same association order as the Spark side
@@ -8277,8 +8104,8 @@ object SparkEntry {
          |SELECT doc_id, lang, n_tokens FROM t
          |WHERE CAST($bucket48Sql AS DOUBLE) <
          |  (CAST(n_tokens AS DOUBLE) * 0.01) * 281474976710656.0
-         |ORDER BY doc_id""".stripMargin,
-    "q_lm_model" ->
+         |ORDER BY doc_id""".stripMargin),
+    Q("q_lm_model", qLmModel,
       // the trigram count table re-derived: same codepoint substr
       // slide, same counts, same (cnt DESC, gram) ranked cut
       s"""WITH p AS (SELECT $normSql AS t FROM documents),
@@ -8287,8 +8114,8 @@ object SparkEntry {
          |  WHERE length(t) >= 3)
          |SELECT gram, CAST(COUNT(*) AS BIGINT) AS cnt FROM g
          |GROUP BY gram
-         |ORDER BY cnt DESC, gram LIMIT $lmMaxTypes""".stripMargin,
-    "q_lm_score" ->
+         |ORDER BY cnt DESC, gram LIMIT $lmMaxTypes""".stripMargin),
+    Q("q_lm_score", qLmScore,
       // parity contract: population and short-doc count re-derived
       // independently; every document's two independently-derived
       // scores must have matched exactly
@@ -8296,8 +8123,8 @@ object SparkEntry {
          |  CAST(COUNT(*) AS BIGINT) AS n_score_match,
          |  CAST(COUNT(*) FILTER (WHERE length($normSql) < 3) AS BIGINT)
          |    AS n_short
-         |FROM documents""".stripMargin,
-    "q_nb_model" ->
+         |FROM documents""".stripMargin),
+    Q("q_nb_model", qNbModel,
       // every integer the NB probabilities derive from, bigram features
       // active: re-tokenize, re-derive every hashed bigram bucket
       // (md5-48bit nibbles mod nbBigramBuckets), re-cap the JOINT
@@ -8318,8 +8145,8 @@ object SparkEntry {
          |  AS label_docs FROM documents GROUP BY lang)
          |SELECT pc.label, pc.token, pc.cnt, dc.label_docs
          |FROM pc JOIN dc ON dc.label = pc.label
-         |ORDER BY pc.label, pc.token""".stripMargin,
-    "q_nb_classify" ->
+         |ORDER BY pc.label, pc.token""".stripMargin),
+    Q("q_nb_classify", qNbClassify,
       // parity contract (the q_lm_score pattern): DuckDB re-derives the
       // doc and doc×label populations; every per-label score and every
       // argmax label from the two independent Spark paths must have
@@ -8333,10 +8160,11 @@ object SparkEntry {
          |    AS n_pairs,
          |  CAST((SELECT COUNT(*) FROM documents) *
          |    (SELECT COUNT(DISTINCT lang) FROM documents) AS BIGINT)
-         |    AS n_score_match""".stripMargin,
-    "q_nb_eval" -> nbEvalOracleSql(None),
-    "q_nb_eval_bigram" -> nbEvalOracleSql(Some(nbBigramBuckets)),
-    "q_dsir_model" ->
+         |    AS n_score_match""".stripMargin),
+    Q("q_nb_eval", qNbEval, nbEvalOracleSql(None)),
+    Q("q_nb_eval_bigram", qNbEvalBigram,
+      nbEvalOracleSql(Some(nbBigramBuckets))),
+    Q("q_dsir_model", qDsirModel,
       // every integer the DSIR log ratios derive from: re-tokenize,
       // re-derive every hashed unigram/bigram bucket (md5-48bit
       // nibbles mod dsirBuckets), re-count both corpora; target
@@ -8345,23 +8173,23 @@ object SparkEntry {
          |SELECT rc.bucket, COALESCE(tc.target_cnt, 0) AS target_cnt,
          |  rc.raw_cnt
          |FROM rc LEFT JOIN tc ON tc.bucket = rc.bucket
-         |ORDER BY rc.bucket""".stripMargin,
-    "q_dsir_score" ->
+         |ORDER BY rc.bucket""".stripMargin),
+    Q("q_dsir_score", qDsirScore,
       // parity contract (the q_nb_classify pattern): DuckDB re-derives
       // the document population; every log weight from the two
       // independent Spark paths must have matched exactly
       s"""SELECT CAST((SELECT COUNT(*) FROM documents) AS BIGINT)
          |    AS n_docs,
          |  CAST((SELECT COUNT(*) FROM documents) AS BIGINT)
-         |    AS n_score_match""".stripMargin,
-    "q_dsir_select" ->
+         |    AS n_score_match""".stripMargin),
+    Q("q_dsir_select", qDsirSelect,
       // the full DSIR chain re-derived: counts → Laplace-smoothed ln
       // ratios (model over the raw buckets — everything scorable has
       // raw_cnt ≥ 1) → per-doc position-ordered fold → top-k by
       // (score DESC, doc_id); boundary-margin robustness spec-audited
       s"""WITH $dsirCountCtes,
-         |${dsirSelectTailSql(dsirSelectK)}""".stripMargin,
-    "q_curation_dsir" ->
+         |${dsirSelectTailSql(dsirSelectK)}""".stripMargin),
+    Q("q_curation_dsir", qCurationDsir,
       // curation ∘ DSIR: the q_quality keep set (the single bit-pinned
       // formula) restricts BOTH the fit corpora and the scored corpus,
       // then the shared DSIR chain cuts the top-k among survivors
@@ -8369,8 +8197,8 @@ object SparkEntry {
          |kdocs AS (SELECT d.doc_id, d.lang, d.text
          |  FROM documents d JOIN qkept USING (doc_id)),
          |${dsirCountCtesFrom("kdocs")},
-         |${dsirSelectTailSql(curationDsirK)}""".stripMargin,
-    "q_cluster_mix" -> {
+         |${dsirSelectTailSql(curationDsirK)}""".stripMargin),
+    Q("q_cluster_mix", qClusterMix, {
       // the discovered-domain mix: the shared fixed-16 quantizer
       // assignment chain (q_sim_ivf/q_semdedup's CTEs), then the
       // q_mix_plan arithmetic and the q_mix_domains 48-bit keep
@@ -8411,26 +8239,26 @@ object SparkEntry {
          |  CAST(COALESCE(k.kept_tokens, 0) AS BIGINT) AS kept_tokens
          |FROM plan p LEFT JOIN k ON k.domain = p.domain
          |ORDER BY p.domain""".stripMargin
-    },
-    "q_bm25_stats" -> {
+    }),
+    Q("q_bm25_stats", qBm25Stats, {
       s"""WITH $bm25Ctes
          |SELECT d.term, d.df, s.n_docs, s.sum_dl,
          |  CAST(s.sum_dl AS DOUBLE) / CAST(s.n_docs AS DOUBLE) AS avgdl
          |FROM dfq d CROSS JOIN st s ORDER BY d.term""".stripMargin
-    },
-    "q_bm25_topk" -> bm25TopkOracleSql,
+    }),
+    Q("q_bm25_topk", qBm25Topk, bm25TopkOracleSql),
     // the persisted-index row serves the SAME query from the pruned
     // postings layout and must land the identical top-k — one oracle
-    "q_bm25_index" -> bm25TopkOracleSql,
-    "q_bm25_append" -> bm25TopkOracleSql,
+    Q("q_bm25_index", qBm25Index, bm25TopkOracleSql),
+    Q("q_bm25_append", qBm25Append, bm25TopkOracleSql),
     // compaction rewrites the same postings rows — every integer
     // unchanged, so the serving oracle is the direct-scan chain too
-    "q_bm25_compact" -> bm25TopkOracleSql,
-    "q_bm25_batch" -> bm25BatchOracleSql,
+    Q("q_bm25_compact", qBm25Compact, bm25TopkOracleSql),
+    Q("q_bm25_batch", qBm25Batch, bm25BatchOracleSql),
     // the persisted-index batch must land the identical multi-query
     // result (same integers, same fold) — one oracle
-    "q_bm25_index_batch" -> bm25BatchOracleSql,
-    "q_hybrid_rrf" -> hybridOracleSql {
+    Q("q_bm25_index_batch", qBm25IndexBatch, bm25BatchOracleSql),
+    Q("q_hybrid_rrf", qHybridRrf, hybridOracleSql {
       // vector tier: exact brute-force cosine over the full store
       val ids = hybridQids.mkString(", ")
       s"""qs AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
@@ -8449,8 +8277,8 @@ object SparkEntry {
          |      ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC)
          |      AS INTEGER) AS rank
          |  FROM vd QUALIFY rank <= $hybridK)""".stripMargin
-    },
-    "q_hybrid_index" -> hybridOracleSql {
+    }),
+    Q("q_hybrid_index", qHybridIndex, hybridOracleSql {
       // vector tier: the persisted-index IVF probe chain (16 lowest-id
       // centroids over the FULL store, nProbe=2) — the batch-IVF
       // oracle's CTEs with the hybrid query set, then the same
@@ -8462,8 +8290,8 @@ object SparkEntry {
          |      ORDER BY dp / (sqrt(nv) * sqrt(nq)) DESC, vec_id ASC)
          |      AS INTEGER) AS rank
          |  FROM fd QUALIFY rank <= $hybridK)""".stripMargin
-    },
-    "q_split" -> {
+    }),
+    Q("q_split", qSplit, {
       // every assignment replayed: the 48-bit bucket against the SAME
       // integer cut points (splitCuts), consecutive half-open ranges,
       // last split absorbs the tail
@@ -8474,10 +8302,10 @@ object SparkEntry {
       s"""SELECT doc_id, lang,
          |  CASE $cases ELSE '${splitSpec.last._1}' END AS split
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
+    }),
     // the mix plan: rate = min(1, frac·budget / avail), saturation and
     // shortfall included; arithmetic mirrors domainMixPlan op for op
-    "q_mix_plan" ->
+    Q("q_mix_plan", qMixPlan,
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n FROM documents),
          |avail AS (SELECT lang, SUM(n) AS m FROM t GROUP BY lang),
@@ -8496,10 +8324,10 @@ object SparkEntry {
          |  greatest(0.0, COALESCE(g.frac, 0.0) * CAST(30000 AS DOUBLE)
          |    - CAST(COALESCE(a.m, 0) AS DOUBLE)) AS shortfall_tokens
          |FROM avail a FULL OUTER JOIN tgt g ON a.lang = g.lang
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
     // the realised keep set: per-doc 48-bit bucket vs the domain rate,
     // same association order as weightedHashSample with c = 1
-    "q_mix_domains" ->
+    Q("q_mix_domains", qMixDomains,
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
          |avail AS (SELECT lang, SUM(n_tokens) AS m FROM t GROUP BY lang),
@@ -8517,11 +8345,11 @@ object SparkEntry {
          |FROM t JOIN plan p ON p.lang = t.lang
          |WHERE CAST($bucket48Sql AS DOUBLE) <
          |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin,
+         |ORDER BY t.doc_id""".stripMargin),
     // power-of-two caps by exact integer bit-length arithmetic (the
     // bin()-string trick both engines share), then pure integer
     // aggregates + ONE divide
-    "q_length_buckets" ->
+    Q("q_length_buckets", qLengthBuckets,
       s"""WITH t AS (SELECT doc_id,
          |  CAST(len($toksSql) AS BIGINT) AS n FROM documents),
          |b AS (SELECT CASE WHEN n <= 1 THEN n
@@ -8534,11 +8362,11 @@ object SparkEntry {
          |  CASE WHEN COUNT(*) * cap = 0 THEN 0.0
          |       ELSE CAST(COUNT(*) * cap - SUM(n) AS DOUBLE)
          |         / CAST(COUNT(*) * cap AS DOUBLE) END AS waste_frac
-         |FROM b GROUP BY cap ORDER BY cap""".stripMargin,
+         |FROM b GROUP BY cap ORDER BY cap""".stripMargin),
     // the α-derived plan: dyadic sqrt-chain power, domain-ordered Σ
     // fold, then the same divide/multiply/min chain as q_mix_plan —
     // every double engine-exact, no transcendental anywhere
-    "q_mix_temperature" ->
+    Q("q_mix_temperature", qMixTemperature,
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n FROM documents),
          |avail AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS m
@@ -8558,10 +8386,10 @@ object SparkEntry {
          |           / CAST(w.m AS DOUBLE)) END AS rate,
          |  greatest(0.0, (w.pw / t2.total) * CAST($mixBudget AS DOUBLE)
          |    - CAST(w.m AS DOUBLE)) AS shortfall_tokens
-         |FROM pw w CROSS JOIN tot t2 ORDER BY w.lang""".stripMargin,
+         |FROM pw w CROSS JOIN tot t2 ORDER BY w.lang""".stripMargin),
     // the UNCLAMPED rate realised as copies: floor(rate) full copies
     // per doc + one (key,copy)-salted fractional threshold decision
-    "q_mix_upsample" ->
+    Q("q_mix_upsample", qMixUpsample,
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
          |avail AS (SELECT lang, SUM(n_tokens) AS m FROM t GROUP BY lang),
@@ -8591,12 +8419,12 @@ object SparkEntry {
          |WHERE cp < fullc OR
          |  CAST(${bucket48OfSql("h")} AS DOUBLE)
          |    < frac * 281474976710656.0
-         |ORDER BY doc_id, cp""".stripMargin,
+         |ORDER BY doc_id, cp""".stripMargin),
     // curation → drift monitor: survivors (side A) vs the raw corpus
     // (side B), the shared curation CTEs feeding the shared divergence
     // arithmetic — same exact columns as q_vocab_drift, js_term
     // excluded for the same documented ln-ULP reason
-    "q_curation_drift" ->
+    Q("q_curation_drift", qCurationDrift,
       s"""$curationCtes,
          |kept AS (SELECT doc_id, lang, text FROM scrub
          |         WHERE $curationKeepPred),
@@ -8623,10 +8451,10 @@ object SparkEntry {
          |  FROM j)
          |SELECT token, c_a, c_b, p_a, p_b,
          |  0.5 * abs(p_a - p_b) AS tv_term
-         |FROM p ORDER BY token""".stripMargin,
+         |FROM p ORDER BY token""".stripMargin),
     // curation → α-derived rates over the SURVIVORS' mass → per-doc
     // 48-bit threshold, one chain
-    "q_curation_temp" ->
+    Q("q_curation_temp", qCurationTemp,
       s"""$curationCtes,
          |kept AS (SELECT doc_id, lang, text FROM scrub
          |         WHERE $curationKeepPred),
@@ -8649,10 +8477,10 @@ object SparkEntry {
          |FROM t JOIN plan p ON p.lang = t.lang
          |WHERE CAST($bucket48Sql AS DOUBLE) <
          |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin,
+         |ORDER BY t.doc_id""".stripMargin),
     // the realised keep set: the α-derived rate joined per doc, then
     // the 48-bit bucket threshold — q_mix_domains' decision chain
-    "q_mix_temp_sample" ->
+    Q("q_mix_temp_sample", qMixTempSample,
       s"""WITH t AS (SELECT doc_id, lang,
          |  CAST(len($toksSql) AS BIGINT) AS n_tokens FROM documents),
          |avail AS (SELECT lang, CAST(SUM(n_tokens) AS BIGINT) AS m
@@ -8672,8 +8500,8 @@ object SparkEntry {
          |FROM t JOIN plan p ON p.lang = t.lang
          |WHERE CAST($bucket48Sql AS DOUBLE) <
          |  (p.rate * 1.0) * 281474976710656.0
-         |ORDER BY t.doc_id""".stripMargin,
-    "q_curation_weighted" ->
+         |ORDER BY t.doc_id""".stripMargin),
+    Q("q_curation_weighted", qCurationWeighted,
       // curate → weight-sample by token budget → pack, one chain: the
       // weighted keep decision applies q_sample_weighted's exact
       // threshold to the CURATED survivors' token counts, then the
@@ -8692,21 +8520,24 @@ object SparkEntry {
          |  FROM samp)
          |SELECT doc_id, lang, tokens, "offset",
          |  CAST(floor("offset" / 128) AS BIGINT) AS bin
-         |FROM kofs ORDER BY lang, doc_id""".stripMargin,
+         |FROM kofs ORDER BY lang, doc_id""".stripMargin),
     // full training re-derivation, one CTE block per learned rule —
     // see bpeTrainOracleSql
-    "q_bpe_train" -> bpeTrainOracleSql(bpeTrainMerges),
+    Q("q_bpe_train", qBpeTrain, bpeTrainOracleSql(bpeTrainMerges)),
     // train→encode composition: per-doc counts from the training
     // chain's final segmentation — see bpeTrainEncodeOracleSql
-    "q_bpe_train_encode" -> bpeTrainEncodeOracleSql(bpeTrainMerges),
-    "q_bpe_train_tokens" -> bpeTrainTokensOracleSql(bpeTrainMerges),
-    "q_wordpiece_train" -> wordpieceTrainOracleSql(wpTrainJoins),
-    "q_wordpiece_train_encode" ->
-      wordpieceTrainEncodeOracleSql(wpTrainJoins),
-    "q_wordpiece_encode_tokens" ->
-      wordpieceEncodeTokensOracleSql(wpTrainJoins),
-    "q_wordpiece_ids" -> wordpieceIdsOracleSql(wpTrainJoins),
-    "q_wordpiece_decode" -> {
+    Q("q_bpe_train_encode", qBpeTrainEncode,
+      bpeTrainEncodeOracleSql(bpeTrainMerges)),
+    Q("q_bpe_train_tokens", qBpeTrainTokens,
+      bpeTrainTokensOracleSql(bpeTrainMerges)),
+    Q("q_wordpiece_train", qWordpieceTrain,
+      wordpieceTrainOracleSql(wpTrainJoins)),
+    Q("q_wordpiece_train_encode", qWordpieceTrainEncode,
+      wordpieceTrainEncodeOracleSql(wpTrainJoins)),
+    Q("q_wordpiece_encode_tokens", qWordpieceEncodeTokens,
+      wordpieceEncodeTokensOracleSql(wpTrainJoins)),
+    Q("q_wordpiece_ids", qWordpieceIds, wordpieceIdsOracleSql(wpTrainJoins)),
+    Q("q_wordpiece_decode", qWordpieceDecode, {
       // the decoded string re-derived from the SAME recursive matcher
       // walk that gates the encoder: strip-##-and-concatenate over the
       // (word index, token index)-ordered stream, identity vs the
@@ -8723,8 +8554,8 @@ object SparkEntry {
          |    THEN 1 ELSE 0 END AS BIGINT) AS round_trip
          |FROM documents d LEFT JOIN dec USING (doc_id)
          |ORDER BY doc_id""".stripMargin
-    },
-    "q_bpe_decode" -> {
+    }),
+    Q("q_bpe_decode", qBpeDecode, {
       // decode∘encode re-derived end to end: the gpt2-piece merge
       // chain's token stream joined BACK through the vocabulary (a
       // missing id decodes as U+FFFD, Spark's unkAs) and re-concatenated
@@ -8755,8 +8586,8 @@ object SparkEntry {
          |    THEN 1 ELSE 0 END AS BIGINT) AS round_trip
          |FROM documents d LEFT JOIN dec USING (doc_id)
          |ORDER BY doc_id""".stripMargin
-    },
-    "q_unigram_ids" ->
+    }),
+    Q("q_unigram_ids", qUnigramIds,
       // parity-contract oracle (the unigram EM's transcendental doubles
       // are not cross-engine reproducible): the POPULATION — every
       // document checked — is re-derived independently, and every
@@ -8769,8 +8600,8 @@ object SparkEntry {
          |  CAST(COUNT(*) AS BIGINT) AS n_unk_contract,
          |  CAST(COUNT(*) AS BIGINT) AS n_decode_match,
          |  CAST(1 AS BIGINT) AS vocab_rank_ok
-         |FROM documents""".stripMargin,
-    "q_tokenizer_types" -> {
+         |FROM documents""".stripMargin),
+    Q("q_tokenizer_types", qTokenizerTypes, {
       val pat = graft.functions.Bpe.preTokenizeRegex.replace("'", "''")
       s"""WITH p AS (SELECT
          |    unnest(regexp_extract_all($normSql, '$pat')) AS piece
@@ -8779,9 +8610,9 @@ object SparkEntry {
          |  WHERE piece <> '' GROUP BY piece)
          |SELECT piece, cnt FROM t
          |ORDER BY cnt DESC, piece LIMIT 40""".stripMargin
-    },
-    "q_unigram_encode_parity" -> unigramParityOracleSql,
-    "q_jdbc_roundtrip" ->
+    }),
+    Q("q_unigram_encode_parity", qUnigramEncodeParity, unigramParityOracleSql),
+    Q("q_jdbc_roundtrip", qJdbcRoundtrip,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
@@ -8789,8 +8620,8 @@ object SparkEntry {
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE)
         |    AS sum_price
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_bpe" -> {
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Q("q_bpe", qBpe, {
       // the SAME tokenizers via the shared bpeChainSql rendering. The
       // gpt2-style path re-extracts the identical pre-token pieces with
       // the shared Java∩RE2 regex (DuckDB is RE2) before the same merge
@@ -8816,8 +8647,8 @@ object SparkEntry {
          |  CAST(COALESCE(g.n_gpt2_pieces, 0) AS BIGINT) AS n_gpt2_pieces,
          |  CAST(COALESCE(g.n_bpe_gpt2, 0) AS BIGINT) AS n_bpe_gpt2
          |FROM ws LEFT JOIN g USING (doc_id) ORDER BY ws.doc_id""".stripMargin
-    },
-    "q_unicode_nfc" -> {
+    }),
+    Q("q_unicode_nfc", qUnicodeNfc, {
       // chr(769) = U+0301 combining acute (decomposed), chr(233) = é
       // (composed); DuckDB's own nfc_normalize is the oracle
       val dec = "text || ' caf' || 'e' || chr(769) || ' caf' || chr(233)"
@@ -8826,15 +8657,15 @@ object SparkEntry {
          |  nfc_normalize($dec) AS nfc,
          |  CAST(length(nfc_normalize($dec)) AS BIGINT) AS len_nfc
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q_bpe_ids" ->
+    }),
+    Q("q_bpe_ids", qBpeIds,
       // full value oracle on the token-ID SEQUENCE: re-run the merge
       // chain, split on the separator, renumber with the identical
       // alphabet-then-rank VALUES table, compare every (pos, token, id)
       s"""WITH $bpeSeqCtes
          |SELECT doc_id, CAST(pos AS BIGINT) AS pos, token, token_id
-         |FROM seq ORDER BY doc_id, pos""".stripMargin,
-    "q_tok_fertility" ->
+         |FROM seq ORDER BY doc_id, pos""".stripMargin),
+    Q("q_tok_fertility", qTokFertility,
       // every integer mass re-derived: strlen bytes, codepoint length,
       // non-empty whitespace words, BPE tokens via the shared merge
       // chain; the two ratio doubles are ONE divide over the exact
@@ -8861,11 +8692,11 @@ object SparkEntry {
          |  CASE WHEN n_tokens = 0 THEN NULL
          |       ELSE CAST(n_bytes AS DOUBLE) / CAST(n_tokens AS DOUBLE)
          |  END AS bytes_per_token
-         |FROM a ORDER BY lang""".stripMargin,
+         |FROM a ORDER BY lang""".stripMargin),
     // striding windows re-cut from the same id sequence: window count
     // n = 1 + ceil((len-64)/48) (one window when len <= 64), window j
     // = positions (j*48, j*48 + 64]
-    "q_token_windows" ->
+    Q("q_token_windows", qTokenWindows,
       s"""WITH $bpeSeqCtes,
          |lens AS (SELECT doc_id, COUNT(*) AS n FROM seq GROUP BY doc_id),
          |wins AS (SELECT doc_id, CAST(w AS BIGINT) AS win_no
@@ -8878,8 +8709,8 @@ object SparkEntry {
          |  CAST(i.token_id AS BIGINT) AS token_id
          |FROM wins w JOIN seq i ON i.doc_id = w.doc_id
          |  AND i.pos > w.win_no * 48 AND i.pos <= w.win_no * 48 + 64
-         |ORDER BY w.doc_id, w.win_no, pos""".stripMargin,
-    "q_pack_bins" ->
+         |ORDER BY w.doc_id, w.win_no, pos""".stripMargin),
+    Q("q_pack_bins", qPackBins,
       // the assembled training bins, value-checked on every per-bin
       // scalar: piece count, token fill, first/last doc, and the id
       // content (count + sum of the ids landing in the bin — combined
@@ -8901,8 +8732,8 @@ object SparkEntry {
          |SELECT a.lang, a.bin, a.n_pieces, a.bin_tokens, a.first_doc,
          |  a.last_doc, b.n_ids, b.id_sum
          |FROM agg1 a JOIN agg2 b USING (lang, bin)
-         |ORDER BY lang, bin""".stripMargin,
-    "q_epoch_shuffle" ->
+         |ORDER BY lang, bin""".stripMargin),
+    Q("q_epoch_shuffle", qEpochShuffle,
       // both epochs' permutations re-derived: the md5 48-bit ordering
       // key nibble by nibble over the same seed:epoch:shard:bin
       // composite, re-sorted — row order is part of the compare, so a
@@ -8918,8 +8749,8 @@ object SparkEntry {
          |SELECT CAST(epoch AS BIGINT) AS epoch, lang, bin,
          |  CAST(epoch_key AS BIGINT) AS epoch_key
          |FROM keys
-         |ORDER BY epoch, epoch_key, lang, bin""".stripMargin,
-    "q_pack_decode" ->
+         |ORDER BY epoch, epoch_key, lang, bin""".stripMargin),
+    Q("q_pack_decode", qPackDecode,
       // each assembled bin's decoded TEXT re-derived end to end: the
       // bin's token rows (same offset cut as q_pack_bins) concatenate
       // in global stream order through the vocabulary's inverse —
@@ -8936,8 +8767,8 @@ object SparkEntry {
          |  string_agg(CASE WHEN token_id = -1 THEN chr(65533)
          |    ELSE token END, '' ORDER BY gpos) AS decoded
          |FROM ids GROUP BY 1, 2
-         |ORDER BY lang, bin""".stripMargin,
-    "q_pack_bpe" ->
+         |ORDER BY lang, bin""".stripMargin),
+    Q("q_pack_bpe", qPackBpe,
       // q_pack's window sum, budgeted by the re-derived BPE token count
       s"""WITH toks AS (SELECT doc_id, lang, unnest($toksSql) AS tok
          |              FROM documents),
@@ -8952,14 +8783,14 @@ object SparkEntry {
          |  FROM tok)
          |SELECT doc_id, lang, tokens, "offset",
          |  CAST(floor("offset" / 256) AS BIGINT) AS bin
-         |FROM ofs ORDER BY lang, doc_id""".stripMargin,
-    "q_curation" ->
+         |FROM ofs ORDER BY lang, doc_id""".stripMargin),
+    Q("q_curation", qCuration,
       s"""$curationCtes
          |SELECT doc_id, lang, quality, text
          |FROM scrub
          |WHERE $curationKeepPred
-         |ORDER BY doc_id""".stripMargin,
-    "q_curation_pack" ->
+         |ORDER BY doc_id""".stripMargin),
+    Q("q_curation_pack", qCurationPack,
       // the curated survivors packed into 128-token bins per language
       // shard: the full training-data flow under one oracle (tokens
       // counted on the REDACTED text, as the Spark pipeline does)
@@ -8974,8 +8805,8 @@ object SparkEntry {
          |  FROM ktok)
          |SELECT doc_id, lang, tokens, "offset",
          |  CAST(floor("offset" / 128) AS BIGINT) AS bin
-         |FROM kofs ORDER BY lang, doc_id""".stripMargin,
-    "q_quantize" ->
+         |FROM kofs ORDER BY lang, doc_id""".stripMargin),
+    Q("q_quantize", qQuantize,
       // round() is half-away-from-zero in both engines, and the TINYINT
       // cast sees an exactly-integral double, so truncation-vs-rounding
       // cast semantics never bite
@@ -8991,12 +8822,12 @@ object SparkEntry {
          |        - CAST(round(CAST(x AS DOUBLE) / scale) AS TINYINT) * scale))) AS max_abs_err,
          |  len(list_filter(embedding, x ->
          |    abs(CAST(round(CAST(x AS DOUBLE) / scale) AS TINYINT)) = 127)) AS n_sat
-         |FROM q ORDER BY vec_id""".stripMargin,
-    "q_semdedup_pairs" ->
+         |FROM q ORDER BY vec_id""".stripMargin),
+    Q("q_semdedup_pairs", qSemdedupPairs,
       s"""WITH $semDedupCtes
          |SELECT cell, id_a, id_b, cosine FROM pairs
-         |ORDER BY cell, id_a, id_b""".stripMargin,
-    "q_semdedup_incr" ->
+         |ORDER BY cell, id_a, id_b""".stripMargin),
+    Q("q_semdedup_incr", qSemdedupIncr,
       // the odd half probes the even-half index: centroids come from the
       // EVEN corpus only (frozen at build, as assignCells), the batch
       // side runs the same assignment chain under them, and pairs cross
@@ -9010,8 +8841,8 @@ object SparkEntry {
          |${semAssignCtes("batch", "b")},
          |${semPairCtes("assign", "corpus", "bassign", "batch", "TRUE")}
          |SELECT cell, id_a, id_b, cosine FROM pairs
-         |ORDER BY cell, id_a, id_b""".stripMargin,
-    "q_semdedup" ->
+         |ORDER BY cell, id_a, id_b""".stripMargin),
+    Q("q_semdedup", qSemdedup,
       // components over the pair graph (recursive min-reachable closure,
       // as q_dedup_clusters), then the paper's survivor rule — shared
       // with q_curation_sem via semSurvivorCtes
@@ -9019,8 +8850,8 @@ object SparkEntry {
          |$semSurvivorCtes
          |SELECT e.vec_id, e.label FROM embeddings e
          |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_semdedup_auto" ->
+         |ORDER BY e.vec_id""".stripMargin),
+    Q("q_semdedup_auto", qSemdedupAuto,
       // the q_semdedup chain under the PRODUCTION sizing rule: the seed
       // cut's LIMIT is ⌈count/24⌉ re-derived from the corpus itself —
       // the same integer the Spark side computes in semDeDupAutoCells
@@ -9029,8 +8860,8 @@ object SparkEntry {
          |$semSurvivorCtes
          |SELECT e.vec_id, e.label FROM embeddings e
          |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_semdedup_best" ->
+         |ORDER BY e.vec_id""".stripMargin),
+    Q("q_semdedup_best", qSemdedupBest,
       // the keep-best survivor policy: same pair graph + components as
       // q_semdedup, survivor = the cluster's MAX quality (the single
       // qualityScoreSql rendering, bit-pinned by q_quality), ties to
@@ -9050,8 +8881,8 @@ object SparkEntry {
          |            WHERE id NOT IN (SELECT id FROM keep))
          |SELECT e.vec_id, e.label FROM embeddings e
          |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_semdedup_2l" ->
+         |ORDER BY e.vec_id""".stripMargin),
+    Q("q_semdedup_2l", qSemdedup2l,
       // the two-level quantizer chain under the production sizing —
       // see semDedup2lCtes; pair + survivor CTEs shared with q_semdedup
       s"""WITH RECURSIVE ${semDedup2lCtes(24)},
@@ -9060,8 +8891,8 @@ object SparkEntry {
          |$semSurvivorCtes
          |SELECT e.vec_id, e.label FROM embeddings e
          |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_semdedup_2l_incr" ->
+         |ORDER BY e.vec_id""".stripMargin),
+    Q("q_semdedup_2l_incr", qSemdedup2lIncr,
       // the odd half probes the PERSISTED even-half two-level index:
       // the corpus side runs its own two-level chain (semDedup2lCtes
       // over the even half), the batch side re-derives the
@@ -9100,8 +8931,8 @@ object SparkEntry {
          |      b.dp / (sqrt(b.nv) * sqrt(b.nc)) DESC, b.cell DESC) = 1),
          |${semPairCtes("assign", "corpus", "bassign", "batch", "TRUE")}
          |SELECT cell, id_a, id_b, cosine FROM pairs
-         |ORDER BY cell, id_a, id_b""".stripMargin,
-    "q_curation_sem" ->
+         |ORDER BY cell, id_a, id_b""".stripMargin),
+    Q("q_curation_sem", qCurationSem,
       // the composed curation-with-semantic-dedup chain: the quality
       // gate's survivors (same formula as q_quality) restrict BOTH the
       // dedup corpus and the centroid seeds (lowest 16 SURVIVING ids,
@@ -9119,8 +8950,8 @@ object SparkEntry {
          |SELECT d.doc_id, d.lang FROM documents d
          |JOIN qkept k ON k.doc_id = d.doc_id
          |WHERE d.doc_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY d.doc_id""".stripMargin,
-    "q_embed_dedup" -> {
+         |ORDER BY d.doc_id""".stripMargin),
+    Q("q_embed_dedup", qEmbedDedup, {
       val bandSel = (0 until 8)
         .map(b => s"SELECT vec_id, $b AS band, ${bandSql("embedding", b, 8)} AS sig FROM embeddings")
         .mkString(" UNION ALL ")
@@ -9140,8 +8971,8 @@ object SparkEntry {
          |  FROM px GROUP BY id_a, id_b)
          |SELECT id_a, id_b, dp / (sqrt(na) * sqrt(nb)) AS cosine FROM dots
          |WHERE dp / (sqrt(na) * sqrt(nb)) >= 0.45 ORDER BY id_a, id_b""".stripMargin
-    },
-    "q_multimodal_meta" -> {
+    }),
+    Q("q_multimodal_meta", qMultimodalMeta, {
       val h = "md5(text)"
       s"""SELECT doc_id,
          |octet_length(CAST(text AS BLOB)) AS n_bytes,
@@ -9150,8 +8981,8 @@ object SparkEntry {
          |${nibSql(h, 5)} + 1 AS n_frames,
          |md5(text) AS payload_md5
          |FROM documents ORDER BY doc_id""".stripMargin
-    },
-    "q_image_phash" ->
+    }),
+    Q("q_image_phash", qImagePhash,
       // composed-parity contract: DuckDB re-derives the populations;
       // on the Spark side every synthesized BMP must have really
       // decoded (ImageIO metadata), every aHash must equal the
@@ -9164,8 +8995,8 @@ object SparkEntry {
          |  CAST(2 * COUNT(*) AS BIGINT) AS n_hash_parity,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs
-         |FROM documents""".stripMargin,
-    "q_audio_fingerprint" ->
+         |FROM documents""".stripMargin),
+    Q("q_audio_fingerprint", qAudioFingerprint,
       // composed-parity contract, audio modality: DuckDB re-derives the
       // populations; on the Spark side every synthesized WAV must have
       // really decoded (javax.sound metadata), every fingerprint must
@@ -9178,8 +9009,8 @@ object SparkEntry {
          |  CAST(2 * COUNT(*) AS BIGINT) AS n_fp_parity,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs
-         |FROM documents""".stripMargin,
-    "q_orc_roundtrip" ->
+         |FROM documents""".stripMargin),
+    Q("q_orc_roundtrip", qOrcRoundtrip,
       // the masking replayed from the PARQUET originals — the ORC
       // store roundtrip must be value-invisible
       s"""SELECT c_custkey,
@@ -9188,8 +9019,8 @@ object SparkEntry {
          |c_nationkey, c_acctbal,
          |CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END
          |  AS c_mktsegment
-         |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_url_dedup" ->
+         |FROM customer ORDER BY c_custkey""".stripMargin),
+    Q("q_url_dedup", qUrlDedup,
       // DuckDB re-synthesizes both raw URL variants per document,
       // replays the ENTIRE canonicalization (lowercase scheme/host,
       // default-port strip, fragment drop, tracking-param removal
@@ -9245,23 +9076,23 @@ object SparkEntry {
          |  COUNT(DISTINCT raw_url) AS n_raw_distinct,
          |  MIN(doc_id) AS min_doc
          |FROM canon GROUP BY canonical_url
-         |ORDER BY canonical_url""".stripMargin,
-    "q_audio_fingerprint_incr" ->
+         |ORDER BY canonical_url""".stripMargin),
+    Q("q_audio_fingerprint_incr", qAudioFingerprintIncr,
       // the serving form's contract: every probe twin matches exactly
       // its landed base, nothing else
       s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
          |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin,
-    "q_image_phash_incr" ->
+         |FROM documents""".stripMargin),
+    Q("q_image_phash_incr", qImagePhashIncr,
       // the image serving form: identical contract on the aHash index
       s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
          |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin,
-    "q_video_fingerprint" ->
+         |FROM documents""".stripMargin),
+    Q("q_video_fingerprint", qVideoFingerprint,
       // composed-parity contract, video modality: every synthesized
       // MP4 container must really parse (mvhd/tkhd box walk), every
       // bitrate-envelope fingerprint must equal the independent
@@ -9274,15 +9105,15 @@ object SparkEntry {
          |  CAST(2 * COUNT(*) AS BIGINT) AS n_fp_parity,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs
-         |FROM documents""".stripMargin,
-    "q_video_fingerprint_incr" ->
+         |FROM documents""".stripMargin),
+    Q("q_video_fingerprint_incr", qVideoFingerprintIncr,
       // the video serving form: identical contract on the vfp index
       s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
          |  CAST(COUNT(*) AS BIGINT) AS n_indexed,
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_matches,
          |  CAST(0 AS BIGINT) AS n_cross_matches
-         |FROM documents""".stripMargin,
-    "q_media_dedup_mixed" ->
+         |FROM documents""".stripMargin),
+    Q("q_media_dedup_mixed", qMediaDedupMixed,
       // the mixed-lake contract: every interleaved payload dispatched
       // to its expected modality, every hash re-derived by the ONE
       // uniform fold, every twin paired, zero cross-document and zero
@@ -9294,8 +9125,8 @@ object SparkEntry {
          |  CAST(COUNT(*) AS BIGINT) AS n_twin_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_pairs,
          |  CAST(0 AS BIGINT) AS n_cross_modality
-         |FROM documents""".stripMargin,
-    "q_media_dedup_best" ->
+         |FROM documents""".stripMargin),
+    Q("q_media_dedup_best", qMediaDedupBest,
       // the media keep-best contract: every base<->twin clique found
       // (n_components == n_docs, 2n clips clustered), one survivor per
       // clique, and EVERY survivor is the one-byte-bigger twin — the
@@ -9305,8 +9136,8 @@ object SparkEntry {
          |  CAST(COUNT(*) AS BIGINT) AS n_components,
          |  CAST(COUNT(*) AS BIGINT) AS n_survivors,
          |  CAST(COUNT(*) AS BIGINT) AS n_survivors_twin
-         |FROM documents""".stripMargin,
-    "q_k_anon" ->
+         |FROM documents""".stripMargin),
+    Q("q_k_anon", qKAnon,
       s"""SELECT c_nationkey, c_mktsegment,
          |COUNT(*) AS group_size,
          |COUNT(DISTINCT c_acctbal) AS distinct_sensitive,
@@ -9317,8 +9148,8 @@ object SparkEntry {
          |    AS c_mktsegment,
          |  c_acctbal FROM customer) m
          |GROUP BY c_nationkey, c_mktsegment
-         |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    "q_privacy_card" ->
+         |ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    Q("q_privacy_card", qPrivacyCard,
       s"""WITH g AS (SELECT c_nationkey, c_mktsegment,
          |    COUNT(*) AS gs, COUNT(DISTINCT c_acctbal) AS ds
          |  FROM (SELECT c_nationkey,
@@ -9334,14 +9165,14 @@ object SparkEntry {
          |  AS rows_k_at_risk,
          |CAST(SUM(CASE WHEN ds < 5 THEN gs ELSE 0 END) AS BIGINT)
          |  AS rows_l_at_risk
-         |FROM g""".stripMargin,
-    "q_fuzzy_join" ->
+         |FROM g""".stripMargin),
+    Q("q_fuzzy_join", qFuzzyJoin,
       s"""SELECT a.c_name AS name_a, b.c_name AS name_b,
          |CAST(levenshtein(a.c_name, b.c_name) AS INTEGER) AS dist
          |FROM customer a JOIN customer b ON a.c_name < b.c_name
          |WHERE levenshtein(a.c_name, b.c_name) <= 1
-         |ORDER BY name_a, name_b""".stripMargin,
-    "q_dp_counts" -> {
+         |ORDER BY name_a, name_b""".stripMargin),
+    Q("q_dp_counts", qDpCounts, {
       // the truncated-geometric CDF thresholds derived NATIVELY in
       // exact integer arithmetic: weights at denominator 2^40 are bit
       // shifts, floor(cum·2^48/S) in HUGEINT; the per-group 48-bit
@@ -9365,8 +9196,8 @@ object SparkEntry {
          |GREATEST(g.n_true + nz.zz, 0) AS n_noisy, g.n_true
          |FROM g JOIN nz USING (c_nationkey)
          |ORDER BY c_nationkey""".stripMargin
-    },
-    "q_l_suppress" ->
+    }),
+    Q("q_l_suppress", qLSuppress,
       s"""WITH m AS (SELECT c_custkey, c_nationkey,
          |  CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END
          |    AS c_mktsegment,
@@ -9378,8 +9209,8 @@ object SparkEntry {
          |SELECT m.c_custkey, m.c_nationkey, m.c_mktsegment,
          |m.c_acctbal, m.acct_bin
          |FROM m JOIN ok USING (c_nationkey, c_mktsegment)
-         |ORDER BY c_custkey""".stripMargin,
-    "q_k_suppress" ->
+         |ORDER BY c_custkey""".stripMargin),
+    Q("q_k_suppress", qKSuppress,
       s"""SELECT c_custkey, c_nationkey, c_mktsegment, c_acctbal
          |FROM (SELECT c_custkey, c_nationkey,
          |  CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END
@@ -9389,8 +9220,8 @@ object SparkEntry {
          |    CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment
          |    END) AS gs
          |  FROM customer) m
-         |WHERE gs >= 10 ORDER BY c_custkey""".stripMargin,
-    "q_k_generalize" ->
+         |WHERE gs >= 10 ORDER BY c_custkey""".stripMargin),
+    Q("q_k_generalize", qKGeneralize,
       s"""WITH raw AS (SELECT c_nationkey, c_acctbal, COUNT(*) AS gs
          |  FROM customer GROUP BY 1, 2),
          |gen AS (SELECT c_nationkey,
@@ -9405,8 +9236,8 @@ object SparkEntry {
          |(SELECT MIN(gs) FROM gen) AS k_generalized,
          |(SELECT COUNT(*) FROM gen) AS groups_generalized,
          |(SELECT CAST(SUM(CASE WHEN gs < 10 THEN gs ELSE 0 END)
-         |  AS BIGINT) FROM gen) AS rows_at_risk_generalized""".stripMargin,
-    "q_t_closeness" ->
+         |  AS BIGINT) FROM gen) AS rows_at_risk_generalized""".stripMargin),
+    Q("q_t_closeness", qTCloseness,
       s"""WITH m AS (SELECT c_nationkey,
          |    CASE WHEN c_acctbal > 0 THEN 'MASKED' ELSE c_mktsegment END
          |      AS c_mktsegment,
@@ -9437,29 +9268,29 @@ object SparkEntry {
          |  * ((SELECT m_bins FROM tot) - 1)) AS t_closeness,
          |emd_num * 4 > (SELECT n_total FROM tot) * n_g
          |  * ((SELECT m_bins FROM tot) - 1) AS t_at_risk
-         |FROM emd ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-    "q_fuzzy_join2" ->
+         |FROM emd ORDER BY c_nationkey, c_mktsegment""".stripMargin),
+    Q("q_fuzzy_join2", qFuzzyJoin2,
       s"""SELECT a.c_name AS name_a, b.c_name AS name_b,
          |CAST(levenshtein(a.c_name, b.c_name) AS INTEGER) AS dist
          |FROM customer a JOIN customer b ON a.c_name < b.c_name
          |WHERE levenshtein(a.c_name, b.c_name) <= 2
-         |ORDER BY name_a, name_b""".stripMargin,
-    "q_fuzzy_two" ->
+         |ORDER BY name_a, name_b""".stripMargin),
+    Q("q_fuzzy_two", qFuzzyTwo,
       s"""SELECT DISTINCT a.c_name AS left_value, b.c_name AS right_value,
          |CAST(levenshtein(a.c_name, b.c_name) AS INTEGER) AS dist
          |FROM customer a JOIN customer b
          |  ON levenshtein(a.c_name, b.c_name) <= 1
          |WHERE a.c_custkey % 2 = 1 AND b.c_custkey % 2 = 0
-         |ORDER BY left_value, right_value""".stripMargin,
-    "q_fuzzy_serve" ->
+         |ORDER BY left_value, right_value""".stripMargin),
+    Q("q_fuzzy_serve", qFuzzyServe,
       s"""SELECT q.c_custkey AS q_id, q.c_name AS query_value,
          |r.c_name AS ref_value,
          |CAST(levenshtein(q.c_name, r.c_name) AS INTEGER) AS dist
          |FROM customer q JOIN customer r
          |  ON levenshtein(q.c_name, r.c_name) <= 1
          |WHERE q.c_custkey % 100 = 0
-         |ORDER BY q_id, ref_value""".stripMargin,
-    "q_rr_release" -> {
+         |ORDER BY q_id, ref_value""".stripMargin),
+    Q("q_rr_release", qRrRelease, {
       // threshold floor(3/4 * 2^48); coin and draw are the 48-bit md5
       // fractions of 'rr17#<key>' and 'rr17#v#<key>'
       val flip = bucket48OfSql("md5('rr17#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
@@ -9477,8 +9308,8 @@ object SparkEntry {
          |  ELSE d.dval END AS c_mktsegment
          |FROM sel s JOIN dom d ON d.idx = s.idx
          |ORDER BY c_custkey""".stripMargin
-    },
-    "q_rr_estimate" -> {
+    }),
+    Q("q_rr_estimate", qRrEstimate, {
       val flip = bucket48OfSql("md5('rr17#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
       val draw =
         bucket48OfSql("md5('rr17#v#' || COALESCE(CAST(c_custkey AS VARCHAR), chr(1)))")
@@ -9508,8 +9339,8 @@ object SparkEntry {
          |t2.n_true
          |FROM obs o LEFT JOIN tru t2 USING (c_mktsegment)
          |ORDER BY c_mktsegment""".stripMargin
-    },
-    "q_privacy_utility" ->
+    }),
+    Q("q_privacy_utility", qPrivacyUtility,
       s"""WITH raw AS (SELECT COUNT(*) AS gs FROM customer
          |  GROUP BY c_nationkey, c_acctbal),
          |gen AS (SELECT COUNT(*) AS gs FROM customer GROUP BY
@@ -9523,8 +9354,8 @@ object SparkEntry {
          |CAST(r.n_rows AS DOUBLE) / r.ng / 10.0 AS cavg_raw,
          |g.dm AS dm_generalized,
          |CAST(g.n_rows AS DOUBLE) / g.ng / 10.0 AS cavg_generalized
-         |FROM r, g""".stripMargin,
-    "q_vocab_drift" ->
+         |FROM r, g""".stripMargin),
+    Q("q_vocab_drift", qVocabDrift,
       // exact integer counts; p = (c+1)/(n+V) with the long add before
       // one cast and one division; tv_term one subtraction — all
       // bit-replayable. js_term (ln-based) is deliberately NOT in the
@@ -9553,8 +9384,8 @@ object SparkEntry {
          |  FROM j)
          |SELECT token, c_a, c_b, p_a, p_b,
          |  0.5 * abs(p_a - p_b) AS tv_term
-         |FROM p ORDER BY token""".stripMargin,
-    "q_mondrian" ->
+         |FROM p ORDER BY token""".stripMargin),
+    Q("q_mondrian", qMondrian,
       // DuckDB replays the WHOLE Mondrian recursion (LeFevre 2006) in
       // one recursive CTE: every round computes each live partition's
       // box, lower medians (quantile_disc == Spark's exact
@@ -9623,8 +9454,8 @@ object SparkEntry {
          |  MIN(ab) AS c_acctbal_lo, MAX(ab) AS c_acctbal_hi,
          |  COUNT(*) AS n_rows
          |FROM t WHERE done
-         |GROUP BY pid ORDER BY pid""".stripMargin,
-    "q_mondrian_gk" ->
+         |GROUP BY pid ORDER BY pid""".stripMargin),
+    Q("q_mondrian_gk", qMondrianGk,
       // contract gate (the q_percentile_gk_parity pattern): the GK
       // split tree is sketch-dependent, so DuckDB pins the population
       // and the booleans — every split's rank interval inside the
@@ -9636,8 +9467,8 @@ object SparkEntry {
          |  TRUE AS gk_within_bound
          |FROM customer
          |WHERE c_nationkey IS NOT NULL
-         |  AND c_acctbal IS NOT NULL""".stripMargin,
-    "q_pca2_parity" ->
+         |  AND c_acctbal IS NOT NULL""".stripMargin),
+    Q("q_pca2_parity", qPca2Parity,
       // replays fitPca's d=2 arithmetic verbatim: exact integer Gram
       // stats; covariance numerator/denominator exact in DECIMAL(38,0)
       // then ONE correctly-rounded cast each (DuckDB's decimal→double
@@ -9658,8 +9489,8 @@ object SparkEntry {
          |  SELECT p.vec_id, 1 AS k,
          |    0.0 + (p.x0 - m.mu0) * m.w10 + (p.x1 - m.mu1) * m.w11 AS v
          |  FROM pts p, mdl m)
-         |ORDER BY vec_id, k""".stripMargin,
-    "q_pca_semdedup" ->
+         |ORDER BY vec_id, k""".stripMargin),
+    Q("q_pca_semdedup", qPcaSemdedup,
       // the d=2 model CTEs (shared with q_pca2_parity) -> whitening in
       // Embed.project's exact op order ((0.0 + Σ(x−μ)w) · (1.0/√max(λ,
       // MIN_NORMAL))) -> REAL narrowing -> the UNCHANGED SemDeDup
@@ -9680,8 +9511,8 @@ object SparkEntry {
          |$semSurvivorCtes
          |SELECT e.vec_id, e.label FROM embeddings e
          |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
-         |ORDER BY e.vec_id""".stripMargin,
-    "q_pca_trace_parity" ->
+         |ORDER BY e.vec_id""".stripMargin),
+    Q("q_pca_trace_parity", qPcaTraceParity,
       // the exact integer trace numerator Σᵢ (n·m_ii − s_i²) of the
       // quantized covariance, re-derived from the raw embeddings the
       // same way q_embed_cov derives the full stats; the three
@@ -9706,8 +9537,8 @@ object SparkEntry {
          |SELECT CAST(d.i - 1 AS INTEGER) AS k,
          |CAST((SELECT t FROM tr) AS VARCHAR) AS trace_num,
          |TRUE AS trace_ok, TRUE AS rayleigh_ok, TRUE AS projvar_ok
-         |FROM dims d ORDER BY k""".stripMargin,
-    "q_embed_cov" ->
+         |FROM dims d ORDER BY k""".stripMargin),
+    Q("q_embed_cov", qEmbedCov,
       // floor(x * 2^20): the power-of-two multiply is IEEE-exact, so
       // the quantized integers (and every sum of them) are identical
       // in both engines
@@ -9731,8 +9562,8 @@ object SparkEntry {
          |CAST(si.s AS BIGINT) AS s_i, CAST(sj.s AS BIGINT) AS s_j,
          |CAST(m.m AS BIGINT) AS m
          |FROM m JOIN s si ON si.i = m.i JOIN s sj ON sj.i = m.j
-         |ORDER BY i, j""".stripMargin,
-    "q_pca" ->
+         |ORDER BY i, j""".stripMargin),
+    Q("q_pca", qPca,
       // parity contract (the q_lm_score pattern): DuckDB re-derives
       // the per-component populations; every (vector, component)
       // projection from the UDF and the independent in-query fold
@@ -9743,6 +9574,6 @@ object SparkEntry {
          |  (SELECT COUNT(*) - COUNT(embedding) FROM embeddings)
          |    AS n_null
          |FROM generate_series(0, 7) AS t(k)
-         |ORDER BY k""".stripMargin,
-  )
+         |ORDER BY k""".stripMargin),
+  ))
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Failures are
@@ -12,31 +11,10 @@ object Verify {
     // whose name contains the substring; the driver always passes two
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[String] = args.drop(2).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // events.parquet carries TIMESTAMP(NANOS); read as raw long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    spark.conf.set("spark.sql.parquet.outputTimestampType",
+      "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     var errors = Map.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(name.contains) }
@@ -48,13 +26,9 @@ object Verify {
           System.err.println(s"[verify] FAILED $name: ${e.getMessage}")
         }
       }
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(k.contains) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Json.obj(
+      SparkEntry.oracleSql.filter { case (k, _) => only.forall(k.contains) }))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), Json.obj(errors))
     // failures are reported via errors.json + stderr; exit 0 so the driver
     // still grades the queries that did produce output
     if (errors.nonEmpty)

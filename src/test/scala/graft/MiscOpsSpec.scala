@@ -216,10 +216,17 @@ class MiscOpsSpec extends SparkSpec {
     assert(documented == SparkEntry.queries.size,
       s"README says $documented queries; SparkEntry has " +
         s"${SparkEntry.queries.size} — update README.md")
-    // every oracle key must name a real query (a typo'd key silently
-    // weakens the gate to rows-only)
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL for unknown queries: $orphans")
+    // plan and oracle share one declaration, so a name can only drift
+    // by being declared twice — which must fail the registry build, not
+    // silently replace the earlier entry
+    val plan = (s: org.apache.spark.sql.SparkSession, _: String) =>
+      s.emptyDataFrame
+    val dup = intercept[IllegalArgumentException](SparkEntry.registry(Seq(
+      SparkEntry.Q("q_twice", plan, "SELECT 1"),
+      SparkEntry.Q("q_once", plan, "SELECT 2"),
+      SparkEntry.Q("q_twice", plan, "SELECT 3"))))
+    assert(dup.getMessage.contains("q_twice") &&
+      !dup.getMessage.contains("q_once"), dup.getMessage)
   }
 
   test("tsMicros: DATE converts via a tz-independent day count (same " +
