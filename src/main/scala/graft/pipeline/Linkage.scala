@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * Blocking invariant (what makes it exact, not approximate): two strings
   * at Levenshtein distance <= d always share at least one member of their
   * <=d-deletion neighborhoods (delete the edited positions from each side),
-  * so candidate generation has NO false negatives; `levenshtein()` then
-  * discards the false positives. The oracle gate proves completeness by
-  * comparing against the brute-force O(n^2) join.
+  * so candidate generation has NO false negatives; an exact Levenshtein
+  * verify then discards the false positives. The oracle gate proves
+  * completeness by comparing against the brute-force O(n^2) join.
   *
   * Scale shape: per string, |s| choose <=d variants (linear in |s| for d=1)
   * — a bounded explode, hashed to 8-byte keys so the one shuffle moves
@@ -27,12 +27,14 @@ import org.apache.spark.sql.functions._
   * Both sides are reduced to DISTINCT strings before blocking, so a
   * duplicate-heavy corpus (the adversarial case for any bucket self-join)
   * costs one pair per distinct pair, not per row pair. Verification is
-  * codegen'd `levenshtein` on the thin candidate set. A long-string corpus
-  * caps the explode via `maxLen` (QI keys are short by nature; a 10 kB
-  * "key" is not a linkage key) — and the cap is DEPTH-AWARE by default
-  * ([[defaultMaxLen]]: 256 at d=1, 64 at d>=2), because the d>=2
-  * neighborhood is C(len, d)-sized and the d=1 default would otherwise
-  * smuggle a ~32,640-variants-per-string cliff into d=2 runs.
+  * a banded Levenshtein inside the bucket fold ([[selfPairs]]) or
+  * codegen'd `levenshtein` on the thin candidate set (the join paths).
+  * A long-string corpus caps the explode via `maxLen` (QI keys are short
+  * by nature; a 10 kB "key" is not a linkage key) — and the cap is
+  * DEPTH-AWARE by default ([[defaultMaxLen]]: 256 at d=1, 64 at d>=2),
+  * because the d>=2 neighborhood is C(len, d)-sized and the d=1 default
+  * would otherwise smuggle a ~32,640-variants-per-string cliff into d=2
+  * runs.
   */
 object Linkage {
 
@@ -83,14 +85,14 @@ object Linkage {
     */
   private val capObsSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Sessions that already carry the cap-observability listener (the
-    * listener is registered once per session, matched by metric-name
-    * prefix so every [[blocked]] observation reports through it).
+  /** UUIDs of the sessions that already carry the cap-observability
+    * listener (the listener is registered once per session, matched by
+    * metric-name prefix so every [[blocked]] observation reports through
+    * it). Keyed on the UUID, not the session, so the set does not keep
+    * stopped sessions reachable.
     */
   private val capListenerSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[
-        org.apache.spark.sql.SparkSession, java.lang.Boolean]())
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Make the depth-aware length cap OBSERVABLE: rows the `maxLen`
     * filter silently drops from blocking would otherwise vanish from
@@ -102,7 +104,8 @@ object Linkage {
     */
   private def ensureCapListener(
       spark: org.apache.spark.sql.SparkSession): Unit =
-    if (capListenerSessions.add(spark)) {
+    if (capListenerSessions.add(
+        org.apache.spark.sql.GraftSessionId(spark))) {
       spark.listenerManager.register(
         new org.apache.spark.sql.util.QueryExecutionListener {
           override def onSuccess(funcName: String,
@@ -126,9 +129,11 @@ object Linkage {
         })
     }
 
-  /** Distinct values of `strCol` with their exploded neighborhood hashes:
-    * (`s`, `vh`). The UDF is a closure (not an inline-literal expression
-    * tree) so the fused stage stays JIT-compiled.
+  /** Distinct values of `strCol` with their exploded neighborhood hashes
+    * and variant lengths: (`s`, `vh`, `vlen`). Consumers that key on the
+    * hash alone select (`s`, `vh`) and the optimizer prunes `vlen`. The
+    * UDF is a closure (not an inline-literal expression tree) so the
+    * fused stage stays JIT-compiled.
     */
   private def blocked(df: DataFrame, strCol: String, maxDist: Int,
       maxLen: Int): DataFrame = {
@@ -163,10 +168,11 @@ object Linkage {
       // and the pinned width — in the plan
       .repartition(width, xxhash64(col("s")))
       .select(col("s"), explode(variantsUdf(col("s"))).as("__v"))
-      .select(col("s"), xxhash64(col("__v")).as("vh"))
+      .select(col("s"), xxhash64(col("__v")).as("vh"),
+        length(col("__v")).as("vlen"))
     // no trailing distinct: deletionVariants dedupes within a string, so
     // (s, vh) rows are already unique (up to 64-bit hash collisions,
-    // which every consumer dedupes after its own join/fold anyway) —
+    // which every consumer tolerates after its own join/fold anyway) —
     // dropping it removes a full exchange of the C(len, d)×-sized
     // variant table from every linkage plan.
   }
@@ -238,46 +244,100 @@ object Linkage {
     if (prev(m) <= maxDist) prev(m) else -1
   }
 
+  /** Banded insert/delete-only distance, `|a| + |b| - 2·LCS(a, b)`: the
+    * exact distance if it is <= `maxDist`, else -1. Same band and
+    * scratch rows as [[boundedLevInto]]; a matching character takes the
+    * diagonal, which is optimal when substitutions are not allowed.
+    */
+  private[graft] def boundedIndel(a: String, b: String, maxDist: Int): Int =
+    boundedIndelInto(a, b, maxDist, new Scratch)
+
+  private[graft] def boundedIndelInto(a: String, b: String, maxDist: Int,
+      scratch: Scratch): Int = {
+    val (n, m) = (a.length, b.length)
+    if (math.abs(n - m) > maxDist) return -1
+    if (n == 0) return m // <= maxDist by the length check
+    if (m == 0) return n // ditto
+    val inf = maxDist + 1
+    scratch.ensure(m)
+    var prev = scratch.prev
+    var cur = scratch.cur
+    java.util.Arrays.fill(prev, 0, m + 1, inf)
+    var j = 0
+    while (j <= math.min(m, maxDist)) { prev(j) = j; j += 1 }
+    var i = 1
+    while (i <= n) {
+      java.util.Arrays.fill(cur, 0, m + 1, inf)
+      val lo = math.max(1, i - maxDist)
+      val hi = math.min(m, i + maxDist)
+      if (i <= maxDist) cur(0) = i
+      var best = cur(0)
+      val c = a.charAt(i - 1)
+      j = lo
+      while (j <= hi) {
+        val v =
+          if (c == b.charAt(j - 1)) prev(j - 1)
+          else math.min(prev(j), cur(j - 1)) + 1
+        cur(j) = v
+        if (v < best) best = v
+        j += 1
+      }
+      if (best > maxDist) return -1
+      val t = prev; prev = cur; cur = t
+      i += 1
+    }
+    if (prev(m) <= maxDist) prev(m) else -1
+  }
+
   /** Self-linkage: all unordered pairs of distinct `strCol` values within
     * Levenshtein distance `maxDist`. Output columns `(name_a, name_b,
     * dist)` with `name_a < name_b`.
     *
-    * Executed as ONE groupBy on the variant hash with an in-bucket
-    * pair fold (sorted members, banded-Levenshtein verify inline) —
-    * the blocked frame is computed once and never self-joined, and the
-    * verify is O(maxDist·len) per candidate instead of the full DP.
-    * Per-bucket state is the bucket's member list: bounded by the
-    * near-dup clique size (the output itself) because both inputs are
-    * distinct-first — the same contract the former self-join had for
-    * its bucket-collision fan-out.
+    * Executed as ONE groupBy on the deletion variant (its hash and its
+    * length) with an in-bucket pair fold — the blocked frame is computed
+    * once and never joined, and each verify is O(maxDist·len) instead of
+    * the full DP. Per-bucket state is the bucket's member list: bounded
+    * by the near-dup clique size (the output itself) because the input
+    * is reduced to distinct strings first.
+    *
+    * Canonical bucket: a true pair shares one bucket per common deletion
+    * variant — Θ(C(len, d)) of them at d = 2 — so the fold emits a pair
+    * only from a bucket whose variant is a LONGEST common subsequence of
+    * the two strings. Complete: `lev(a, b) <= d` implies
+    * `LCS(a, b) >= max(|a|, |b|) - d`, so an LCS string is a <=d-deletion
+    * variant of both sides and both always meet in its bucket. Cheap to
+    * test: a bucket variant `v` is a common subsequence of its members,
+    * so `indel(a, b) <= |a| + |b| - 2|v|`, with equality exactly when `v`
+    * is an LCS — one banded insert/delete DP ([[boundedIndelInto]])
+    * rejects the non-canonical candidates before the Levenshtein verify.
+    * Every emission follows the exact verify on the real strings, so a
+    * 64-bit hash collision can only add a candidate (or a redundant
+    * copy), never lose or fake a pair, and a string never pairs with
+    * itself. Pairs with several distinct LCS strings (transpositions:
+    * `ab`/`ba`) still leave more than one bucket; the trailing
+    * `distinct` removes those few copies.
     */
   def selfPairs(df: DataFrame, strCol: String, maxDist: Int,
       maxLen: Int = -1): DataFrame = {
     val cap = resolveMaxLen(maxDist, maxLen)
     val d = maxDist
-    // verified pairs leave the bucket fold as 16-BYTE HASH PAIRS, not
-    // string pairs: a true pair shares one bucket per common deletion
-    // variant — Θ(C(len, d)) buckets at d = 2 — so the fold re-emits
-    // every verified pair hundreds of times, and shuffling the
-    // duplicated STRING rows into the dedup exchange was the operator's
-    // residual bottleneck (measured at sf0.1: 153 MB in-bucket shuffle
-    // for a 47 MB distinct pair set; guide §2.3 "shuffle keys and
-    // metadata instead of payloads"). Strings re-attach AFTER the
-    // 16-byte distinct via two joins on xxhash64(s) against the thin
-    // distinct-strings frame; a 64-bit collision can only ADD candidate
-    // attachments, never lose one, and the trailing `levenshtein`
-    // verify discards them — so the result stays exact.
-    val pairsUdf = udf((hs: Seq[Long], ss: Seq[String]) => {
-      val arr = hs.zip(ss).distinct.sortBy(_._2).toArray
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val pairsUdf = udf((ss: Seq[String], vlen: Int) => {
+      val arr = ss.toArray
+      val out =
+        scala.collection.mutable.ArrayBuffer.empty[(String, String, Int)]
       val scratch = new Scratch
       var i = 0
       while (i < arr.length - 1) {
+        val a = arr(i)
         var j = i + 1
         while (j < arr.length) {
-          if (boundedLevInto(arr(i)._2, arr(j)._2, d, scratch) >= 0) {
-            val (ha, hb) = (arr(i)._1, arr(j)._1)
-            out += (if (ha <= hb) (ha, hb) else (hb, ha))
+          val b = arr(j)
+          // k = indel(a, b) iff this bucket's variant is an LCS of a, b
+          val k = a.length + b.length - 2 * vlen
+          // (k - 1 < 0 reports -1: a zero-gap pair is always canonical)
+          if (a != b && boundedIndelInto(a, b, k - 1, scratch) < 0) {
+            val dist = boundedLevInto(a, b, d, scratch)
+            if (dist >= 0) out += ((a, b, dist))
           }
           j += 1
         }
@@ -285,40 +345,23 @@ object Linkage {
       }
       out.toSeq
     })
-    val candHashes = blocked(df, strCol, maxDist, cap)
-      .withColumn("h", xxhash64(col("s")))
+    blocked(df, strCol, maxDist, cap)
       // pinned-width bucket shuffle: the fold below does O(bucket²)
       // verifies per bucket — a stage whose work per input byte AQE's
       // bytes-only coalescing underestimates (measured: 16 of 32
-      // slots). The repartition on `vh` replaces (not adds to) the
-      // aggregate's own exchange, so the plan's shuffle count is
-      // unchanged.
+      // slots). Hash partitioning on `vh` already clusters every
+      // (vh, vlen) group, so the repartition replaces (not adds to)
+      // the aggregate's own exchange.
       .repartition(blockWidth(df.sparkSession), col("vh"))
-      .groupBy(col("vh"))
-      .agg(collect_list(struct(col("h"), col("s"))).as("ms"))
+      .groupBy(col("vh"), col("vlen"))
+      .agg(collect_list(col("s")).as("ms"))
       // singleton buckets (the vast majority in a sane corpus) have no
       // pairs — drop them before the per-bucket fold even runs
       .filter(size(col("ms")) >= 2)
-      // aligned field extraction (GetArrayStructFields preserves
-      // element order), so the UDF zips hashes back to their strings
-      .select(explode(pairsUdf(col("ms.h"), col("ms.s"))).as("p"))
-      .select(col("p._1").as("ha"), col("p._2").as("hb"))
-      .distinct()
-    // thin distinct-strings frame for the re-attach (same distinct the
-    // blocking pass starts from; recomputed rather than cached — the
-    // 100 TB posture prefers a second pruned scan over persisting)
-    val strs = df.select(col(strCol).cast("string").as("s"))
-      .na.drop("any")
-      .filter(length(col("s")) <= cap)
-      .distinct()
-      .withColumn("h", xxhash64(col("s")))
-    candHashes
-      .join(strs.select(col("h").as("ha"), col("s").as("__sa")), "ha")
-      .join(strs.select(col("h").as("hb"), col("s").as("__sb")), "hb")
-      .select(least(col("__sa"), col("__sb")).as("name_a"),
-        greatest(col("__sa"), col("__sb")).as("name_b"))
-      .withColumn("dist", levenshtein(col("name_a"), col("name_b")))
-      .filter(col("dist") <= maxDist)
+      .select(explode(pairsUdf(col("ms"), col("vlen"))).as("p"))
+      .select(least(col("p._1"), col("p._2")).as("name_a"),
+        greatest(col("p._1"), col("p._2")).as("name_b"),
+        col("p._3").as("dist"))
       .distinct()
   }
 
@@ -347,6 +390,7 @@ object Linkage {
   def blockReference(reference: DataFrame, refCol: String, maxDist: Int,
       maxLen: Int = -1): DataFrame =
     blocked(reference, refCol, maxDist, resolveMaxLen(maxDist, maxLen))
+      .select("s", "vh")
 
   /** Id-keyed serving form: every (query row, reference value) match
     * within `maxDist`, KEEPING the query's id column — the shape a

@@ -663,6 +663,40 @@ class PrivacyLinkageSpec extends SparkSpec {
     assert(Linkage.boundedLev("aaab", "b", 3) == 3)
   }
 
+  test("property: boundedIndel == full insert/delete DP capped at maxDist") {
+    import org.scalacheck.{Gen => SGen, Prop, Test => SCTest}
+    // |a| + |b| - 2·LCS(a, b), by the textbook LCS table
+    def indel(a: String, b: String): Int = {
+      val lcs = Array.ofDim[Int](a.length + 1, b.length + 1)
+      for (i <- 1 to a.length; j <- 1 to b.length)
+        lcs(i)(j) =
+          if (a(i - 1) == b(j - 1)) lcs(i - 1)(j - 1) + 1
+          else math.max(lcs(i - 1)(j), lcs(i)(j - 1))
+      a.length + b.length - 2 * lcs(a.length)(b.length)
+    }
+    val word = SGen.choose(0, 10).flatMap(n =>
+      SGen.listOfN(n, SGen.oneOf('a', 'b', 'c')).map(_.mkString))
+    val prop = Prop.forAll(word, word, SGen.choose(0, 6)) { (a, b, d) =>
+      val want = { val l = indel(a, b); if (l <= d) l else -1 }
+      Linkage.boundedIndel(a, b, d) == want
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(res.passed, res.status.toString)
+    // the empty/length-gap edges explicitly
+    assert(Linkage.boundedIndel("", "", 0) == 0)
+    assert(Linkage.boundedIndel("ab", "", 2) == 2)
+    assert(Linkage.boundedIndel("", "ab", 2) == 2)
+    assert(Linkage.boundedIndel("ab", "", 1) == -1)
+    assert(Linkage.boundedIndel("aaab", "b", 3) == 3)
+    // a negative bound reports -1 even for equal strings
+    assert(Linkage.boundedIndel("ab", "ab", -1) == -1)
+    // a substitution costs 2 without the substitute move
+    assert(Linkage.boundedIndel("ab", "ac", 2) == 2)
+    assert(Linkage.boundedIndel("ab", "ac", 1) == -1)
+    assert(Linkage.boundedIndel("abab", "baba", 2) == 2)
+  }
+
   test("property: blocking completeness — selfPairs == brute force on " +
       "random corpora at d = 1 and d = 2") {
     import org.scalacheck.{Gen => SGen, Prop, Test => SCTest}
@@ -687,27 +721,38 @@ class PrivacyLinkageSpec extends SparkSpec {
       SGen.listOfN(n, SGen.oneOf('a', 'b', 'c')).map(_.mkString))
     val corpus = SGen.choose(2, 12).flatMap(n => SGen.listOfN(n, word))
     val dist = SGen.oneOf(1, 2)
-    val prop = Prop.forAll(corpus, dist) { (ws, d) =>
-      val names = ws.distinct
-      val got = Linkage.selfPairs(names.toDF("w"), "w", d)
+    // exact pair set, each row once, name_a < name_b strictly
+    def matches(names: Seq[String], d: Int): Boolean = {
+      val rows = Linkage.selfPairs(names.toDF("w"), "w", d)
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-        .toSet
       val want = (for {
         a <- names; b <- names if a < b
         dd = lev(a, b) if dd <= d
       } yield (a, b, dd)).toSet
-      got == want
+      rows.length == rows.toSet.size && rows.forall(r => r._1 < r._2) &&
+        rows.toSet == want
     }
+    val prop = Prop.forAll(corpus, dist) { (ws, d) => matches(ws.distinct, d) }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, res.status.toString)
+    // transpositions: these pairs have several distinct longest common
+    // subsequences ("a"/"b"; "aba"/"bab"), so they meet in more than one
+    // canonical bucket and only the trailing distinct keeps them single
+    val ties = Seq("ab", "ba", "abab", "baba", "aabb", "bbaa", "abc", "bca")
+    for (d <- Seq(1, 2)) assert(matches(ties, d), s"ties at d = $d")
   }
 
   test("selfPairs plan has no cartesian product and no all-pairs join") {
     val df = spark.read.parquet(s"$fixtures/customer.parquet")
-    val plan = Linkage.selfPairs(df, "c_name", 1)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    for (d <- Seq(1, 2)) {
+      val plan = Linkage.selfPairs(df, "c_name", d)
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("CartesianProduct"), plan)
+      // no join node of any kind, and the input is scanned exactly once:
+      // pairs leave the bucket fold as strings, nothing re-attaches them
+      assert(!plan.contains("Join"), plan)
+      assert("FileScan".r.findAllMatchIn(plan).size == 1, plan)
+    }
   }
 }
