@@ -240,15 +240,17 @@ object Dedup {
     * the shape holds at 100 TB of corpus — but not for one huge document.
     *
     * Per-document bound: `__shs` holds a doc's whole distinct shingle set
-    * in ONE row, and both sides of the Jaccard join shuffle it. A doc of
-    * T tokens has at most T - `shingleK` + 1 shingles of `shingleK`
-    * tokens each, so the array is about `shingleK` × (text bytes) plus
-    * 8-16 bytes of offset and padding per shingle. That must stay under
-    * Spark's 2 GB limit on one row or array (and fit executor memory):
-    * roughly 300 MB of text per document at `shingleK` = 3 on ~5-byte
-    * tokens, less on shorter tokens. Nothing here truncates or splits a
-    * larger document; a corpus that may hold one must cap or chunk its
-    * documents before this call.
+    * in ONE row, and the Jaccard join puts BOTH documents' arrays of a
+    * candidate pair into one joined row. A doc of T tokens has at most
+    * T - `shingleK` + 1 shingles of `shingleK` tokens each, so its array
+    * is about `shingleK` × (text bytes) plus 8-16 bytes of offset and
+    * padding per shingle. The sum for the pair must stay under Spark's
+    * 2 GB limit on one row (and fit executor memory): derived from those
+    * sizes, not measured, that is about 300 MB of text for the two
+    * documents together — about 150 MB each — at `shingleK` = 3 on
+    * ~5-byte tokens, less on shorter tokens. Nothing here truncates or
+    * splits a larger document; a corpus that may hold one must cap or
+    * chunk its documents before this call.
     */
   private def shingleSetsWithSigs(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int, numHashes: Int,

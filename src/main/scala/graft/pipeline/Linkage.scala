@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Edit-distance record linkage via deletion-neighborhood blocking
   * (FastSS — Bocek, Hunt & Stiller 2007; popularized as SymSpell). The
@@ -130,15 +131,19 @@ object Linkage {
     }
 
   /** Distinct values of `strCol` with their exploded neighborhood hashes
-    * and variant lengths: (`s`, `vh`, `vlen`). Consumers that key on the
-    * hash alone select (`s`, `vh`) and the optimizer prunes `vlen`. The
-    * UDF is a closure (not an inline-literal expression tree) so the
-    * fused stage stays JIT-compiled.
+    * and variant lengths: (`s`, `vh`, `vlen`). `vlen` counts UTF-16
+    * units, the unit [[deletionVariants]] deletes and the banded DPs
+    * compare — Spark's `length` counts code points, which differs for a
+    * variant that keeps a character outside the BMP. Consumers that key
+    * on the hash alone select (`s`, `vh`). The UDF is a closure (not an
+    * inline-literal expression tree) so the fused stage stays
+    * JIT-compiled.
     */
   private def blocked(df: DataFrame, strCol: String, maxDist: Int,
       maxLen: Int): DataFrame = {
     val d = maxDist
-    val variantsUdf = udf((s: String) => deletionVariants(s, d))
+    val variantsUdf =
+      udf((s: String) => deletionVariants(s, d).map(v => (v, v.length)))
     ensureCapListener(df.sparkSession)
     // the explode below fans each distinct string into Θ(C(len, d))
     // variant rows, so the stage AFTER the distinct's exchange does
@@ -168,8 +173,8 @@ object Linkage {
       // and the pinned width — in the plan
       .repartition(width, xxhash64(col("s")))
       .select(col("s"), explode(variantsUdf(col("s"))).as("__v"))
-      .select(col("s"), xxhash64(col("__v")).as("vh"),
-        length(col("__v")).as("vlen"))
+      .select(col("s"), xxhash64(col("__v._1")).as("vh"),
+        col("__v._2").as("vlen"))
     // no trailing distinct: deletionVariants dedupes within a string, so
     // (s, vh) rows are already unique (up to 64-bit hash collisions,
     // which every consumer tolerates after its own join/fold anyway) —
@@ -187,10 +192,14 @@ object Linkage {
   /** Banded Levenshtein (Ukkonen 1985): the exact distance if it is
     * <= `maxDist`, else -1 — O(maxDist·len) instead of the full
     * O(len²) DP, since cells farther than `maxDist` off the diagonal
-    * can never contribute to a distance within the bound.
+    * can never contribute to a distance within the bound. With
+    * `subCost` = 2 a substitution costs as much as a delete plus an
+    * insert, so the value is the insert/delete-only distance
+    * `|a| + |b| - 2·LCS(a, b)`.
     */
-  private[graft] def boundedLev(a: String, b: String, maxDist: Int): Int =
-    boundedLevInto(a, b, maxDist, new Scratch)
+  private[graft] def boundedLev(a: String, b: String, maxDist: Int,
+      subCost: Int = 1): Int =
+    boundedLevInto(a, b, maxDist, subCost, new Scratch)
 
   /** Per-thread DP scratch: a hot caller (the in-bucket pair fold runs
     * tens of millions of verifies per task at corpus scale) reuses the
@@ -208,7 +217,7 @@ object Linkage {
   }
 
   private[graft] def boundedLevInto(a: String, b: String, maxDist: Int,
-      scratch: Scratch): Int = {
+      subCost: Int, scratch: Scratch): Int = {
     val (n, m) = (a.length, b.length)
     if (math.abs(n - m) > maxDist) return -1
     if (n == 0) return m // <= maxDist by the length check
@@ -229,7 +238,8 @@ object Linkage {
       var best = cur(0) // column 0 is part of the row minimum
       j = lo
       while (j <= hi) {
-        val sub = prev(j - 1) + (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1)
+        val sub = prev(j - 1) +
+          (if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else subCost)
         val del = prev(j) + 1
         val ins = cur(j - 1) + 1
         val v = math.min(sub, math.min(del, ins))
@@ -238,51 +248,6 @@ object Linkage {
         j += 1
       }
       if (best > maxDist) return -1 // the whole band overflowed
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    if (prev(m) <= maxDist) prev(m) else -1
-  }
-
-  /** Banded insert/delete-only distance, `|a| + |b| - 2·LCS(a, b)`: the
-    * exact distance if it is <= `maxDist`, else -1. Same band and
-    * scratch rows as [[boundedLevInto]]; a matching character takes the
-    * diagonal, which is optimal when substitutions are not allowed.
-    */
-  private[graft] def boundedIndel(a: String, b: String, maxDist: Int): Int =
-    boundedIndelInto(a, b, maxDist, new Scratch)
-
-  private[graft] def boundedIndelInto(a: String, b: String, maxDist: Int,
-      scratch: Scratch): Int = {
-    val (n, m) = (a.length, b.length)
-    if (math.abs(n - m) > maxDist) return -1
-    if (n == 0) return m // <= maxDist by the length check
-    if (m == 0) return n // ditto
-    val inf = maxDist + 1
-    scratch.ensure(m)
-    var prev = scratch.prev
-    var cur = scratch.cur
-    java.util.Arrays.fill(prev, 0, m + 1, inf)
-    var j = 0
-    while (j <= math.min(m, maxDist)) { prev(j) = j; j += 1 }
-    var i = 1
-    while (i <= n) {
-      java.util.Arrays.fill(cur, 0, m + 1, inf)
-      val lo = math.max(1, i - maxDist)
-      val hi = math.min(m, i + maxDist)
-      if (i <= maxDist) cur(0) = i
-      var best = cur(0)
-      val c = a.charAt(i - 1)
-      j = lo
-      while (j <= hi) {
-        val v =
-          if (c == b.charAt(j - 1)) prev(j - 1)
-          else math.min(prev(j), cur(j - 1)) + 1
-        cur(j) = v
-        if (v < best) best = v
-        j += 1
-      }
-      if (best > maxDist) return -1
       val t = prev; prev = cur; cur = t
       i += 1
     }
@@ -308,14 +273,18 @@ object Linkage {
     * variant of both sides and both always meet in its bucket. Cheap to
     * test: a bucket variant `v` is a common subsequence of its members,
     * so `indel(a, b) <= |a| + |b| - 2|v|`, with equality exactly when `v`
-    * is an LCS — one banded insert/delete DP ([[boundedIndelInto]])
-    * rejects the non-canonical candidates before the Levenshtein verify.
+    * is an LCS — one banded insert/delete DP ([[boundedLevInto]] with
+    * substitution cost 2) rejects the non-canonical candidates before
+    * the Levenshtein verify. Lengths, variants and both DPs count UTF-16
+    * units, so the rule holds for characters outside the BMP too.
     * Every emission follows the exact verify on the real strings, so a
     * 64-bit hash collision can only add a candidate (or a redundant
     * copy), never lose or fake a pair, and a string never pairs with
     * itself. Pairs with several distinct LCS strings (transpositions:
     * `ab`/`ba`) still leave more than one bucket; the trailing
-    * `distinct` removes those few copies.
+    * `distinct` removes those few copies. `dist` is Spark's code-point
+    * `levenshtein`, as in [[fuzzyJoin]]: the verified UTF-16 distance
+    * when both strings lie in the BMP, recomputed otherwise.
     */
   def selfPairs(df: DataFrame, strCol: String, maxDist: Int,
       maxLen: Int = -1): DataFrame = {
@@ -335,9 +304,14 @@ object Linkage {
           // k = indel(a, b) iff this bucket's variant is an LCS of a, b
           val k = a.length + b.length - 2 * vlen
           // (k - 1 < 0 reports -1: a zero-gap pair is always canonical)
-          if (a != b && boundedIndelInto(a, b, k - 1, scratch) < 0) {
-            val dist = boundedLevInto(a, b, d, scratch)
-            if (dist >= 0) out += ((a, b, dist))
+          if (a != b && boundedLevInto(a, b, k - 1, 2, scratch) < 0) {
+            val lev = boundedLevInto(a, b, d, 1, scratch)
+            if (lev >= 0) {
+              val dist = if (inBmp(a) && inBmp(b)) lev else
+                UTF8String.fromString(a).levenshteinDistance(
+                  UTF8String.fromString(b))
+              if (dist <= d) out += ((a, b, dist))
+            }
           }
           j += 1
         }
@@ -364,6 +338,10 @@ object Linkage {
         col("p._3").as("dist"))
       .distinct()
   }
+
+  /** No character outside the BMP, so UTF-16 units are code points. */
+  private def inBmp(s: String): Boolean =
+    s.codePointCount(0, s.length) == s.length
 
   /** Two-source linkage: distinct `(leftCol, rightCol)` value pairs within
     * `maxDist`. Equal values link at dist 0 — the caller excludes them if

@@ -663,7 +663,8 @@ class PrivacyLinkageSpec extends SparkSpec {
     assert(Linkage.boundedLev("aaab", "b", 3) == 3)
   }
 
-  test("property: boundedIndel == full insert/delete DP capped at maxDist") {
+  test("property: boundedLev at substitution cost 2 == full insert/delete " +
+      "DP capped at maxDist") {
     import org.scalacheck.{Gen => SGen, Prop, Test => SCTest}
     // |a| + |b| - 2·LCS(a, b), by the textbook LCS table
     def indel(a: String, b: String): Int = {
@@ -678,23 +679,23 @@ class PrivacyLinkageSpec extends SparkSpec {
       SGen.listOfN(n, SGen.oneOf('a', 'b', 'c')).map(_.mkString))
     val prop = Prop.forAll(word, word, SGen.choose(0, 6)) { (a, b, d) =>
       val want = { val l = indel(a, b); if (l <= d) l else -1 }
-      Linkage.boundedIndel(a, b, d) == want
+      Linkage.boundedLev(a, b, d, 2) == want
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
     // the empty/length-gap edges explicitly
-    assert(Linkage.boundedIndel("", "", 0) == 0)
-    assert(Linkage.boundedIndel("ab", "", 2) == 2)
-    assert(Linkage.boundedIndel("", "ab", 2) == 2)
-    assert(Linkage.boundedIndel("ab", "", 1) == -1)
-    assert(Linkage.boundedIndel("aaab", "b", 3) == 3)
+    assert(Linkage.boundedLev("", "", 0, 2) == 0)
+    assert(Linkage.boundedLev("ab", "", 2, 2) == 2)
+    assert(Linkage.boundedLev("", "ab", 2, 2) == 2)
+    assert(Linkage.boundedLev("ab", "", 1, 2) == -1)
+    assert(Linkage.boundedLev("aaab", "b", 3, 2) == 3)
     // a negative bound reports -1 even for equal strings
-    assert(Linkage.boundedIndel("ab", "ab", -1) == -1)
-    // a substitution costs 2 without the substitute move
-    assert(Linkage.boundedIndel("ab", "ac", 2) == 2)
-    assert(Linkage.boundedIndel("ab", "ac", 1) == -1)
-    assert(Linkage.boundedIndel("abab", "baba", 2) == 2)
+    assert(Linkage.boundedLev("ab", "ab", -1, 2) == -1)
+    // a substitution costs a delete plus an insert
+    assert(Linkage.boundedLev("ab", "ac", 2, 2) == 2)
+    assert(Linkage.boundedLev("ab", "ac", 1, 2) == -1)
+    assert(Linkage.boundedLev("abab", "baba", 2, 2) == 2)
   }
 
   test("property: blocking completeness — selfPairs == brute force on " +
@@ -741,6 +742,20 @@ class PrivacyLinkageSpec extends SparkSpec {
     // canonical bucket and only the trailing distinct keeps them single
     val ties = Seq("ab", "ba", "abab", "baba", "aabb", "bbaa", "abc", "bca")
     for (d <- Seq(1, 2)) assert(matches(ties, d), s"ties at d = $d")
+    // outside the BMP: variants, their lengths and the fold's verify
+    // count UTF-16 units (a surrogate pair is two), the reported dist
+    // counts code points; so a pair is found when its UTF-16 distance is
+    // within d and reports its code-point distance ("a" and eb, 2 apart
+    // in code points but 3 in UTF-16 units, do not pair at d = 2)
+    val (e, ea, eb) = ("\uD83D\uDE00", "\uD83D\uDE00a", "\uD83D\uDE00b")
+    val astral = Seq(ea, eb, e, "a")
+    def rowsOf(d: Int) = Linkage.selfPairs(astral.toDF("w"), "w", d)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+    val d1 = Set((e, ea, 1), (e, eb, 1), (ea, eb, 1))
+    assert(rowsOf(1).toSet == d1)
+    val d2 = rowsOf(2)
+    assert(d2.length == d2.toSet.size)
+    assert(d2.toSet == d1 ++ Set(("a", e, 1), ("a", ea, 1)))
   }
 
   test("selfPairs plan has no cartesian product and no all-pairs join") {
